@@ -48,7 +48,7 @@ def shuffle_partitions_for(master: str, data_bytes: int | None = None) -> int:
     if m:
         import os
 
-        cores = os.cpu_count() or 8 if m.group(1) == "*" else int(m.group(1))
+        cores = (os.cpu_count() or 8) if m.group(1) == "*" else int(m.group(1))
         base = cores * 2
     else:
         base = 200  # cluster default ceiling; AQE coalesces

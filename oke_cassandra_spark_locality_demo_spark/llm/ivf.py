@@ -27,17 +27,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
+from .similarity import TOP_K, _cosine, _probes, _top_k_cosine
 
 K_CELLS = 16
 N_ITERS = 5
 N_PROBE = 4
-TOP_K = 5
 
 
 def _assign_udf(centroids: list[list[float]]):
@@ -204,31 +203,15 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         _assign_udf(centroids)(F.col("v")).alias("cell"),
     )
-    probe_cells = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.explode(_probe_udf(centroids, N_PROBE)(F.col("v"))).alias("cell"),
-        )
+    probe_cells = _probes(emb).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.explode(_probe_udf(centroids, N_PROBE)(F.col("v"))).alias("cell"),
     )
-
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, z: acc + z
-    )
-    cos = dot(F.col("qv"), F.col("cv")) / (
-        F.sqrt(dot(F.col("qv"), F.col("qv"))) * F.sqrt(dot(F.col("cv"), F.col("cv")))
-    )
-    scored = (
+    return _top_k_cosine(
         cells.join(F.broadcast(probe_cells), "cell")
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", cos.alias("cosine"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "cand_id", F.round("cosine", 6).alias("cosine"))
+        .select("query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine"))
     )
 
 
@@ -283,10 +266,9 @@ def q_sim_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = spark.read.parquet(path)
 
     # one representative probe — the LOWEST member of q_sim_ivf's probe
-    # set (vec_id % 100 == 0), not a hardcoded id 0: a fixture refresh
-    # with 1-based ids must not crash the audit
-    probe_pool = emb.filter(F.col("vec_id") % 100 == 0)
-    probe = probe_pool.orderBy("vec_id").limit(1).select(
+    # set (`_probes`), not a hardcoded id 0: a fixture refresh with
+    # 1-based ids must not crash the audit
+    probe = _probes(emb).orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         _probe_udf(centroids, N_PROBE)(F.col("v")).alias("cells"),
@@ -312,20 +294,13 @@ def q_sim_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     files_total = len(index.inputFiles())
 
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, z: acc + z
-    )
     qv = F.array(*[F.lit(float(x)) for x in probe_row["qv"]])
-    cos = dot(qv, F.col("v")) / (
-        F.sqrt(dot(qv, qv)) * F.sqrt(dot(F.col("v"), F.col("v")))
-    )
-    w = W.orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    served = (
-        pruned.filter(F.col("vec_id") != probe_id)
-        .select(F.col("vec_id").alias("cand_id"), cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("cand_id", F.round("cosine", 6).alias("cosine"))
+    served = _top_k_cosine(
+        pruned.filter(F.col("vec_id") != probe_id).select(
+            F.lit(probe_id).cast("long").alias("query_id"),
+            F.col("vec_id").alias("cand_id"),
+            _cosine(qv, F.col("v")).alias("cosine"),
+        )
     )
     served_set = {(r["cand_id"], r["cosine"]) for r in served.collect()}
     memory_set = {

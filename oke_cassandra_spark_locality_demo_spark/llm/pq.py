@@ -49,17 +49,19 @@ from ..catalog import load
 from ..registry import register
 from .ivf import TRAIN_CAP, quant_key, quant_memo
 from .similarity import (
-    MAX_PROBES,
     _KNN_ORACLE,
-    _dot,
+    TOP_K,
+    _batch_top_k,
+    _cosine,
+    _probe_block,
     _recall_audit,
+    _top_k_cosine,
     q_sim_knn_exact,
 )
 
 M_SUB = 8  #: subspaces
 K_CODES = 16  #: centroids per subspace codebook
 PQ_ITERS = 3  #: Lloyd iterations per subspace
-TOP_K = 5
 RERANK = 8  #: ADC shortlist size multiplier (R = RERANK·k per query)
 
 
@@ -146,9 +148,9 @@ def _encode_udf(codebooks: list[list[list[float]]]):
 @register("q_sim_pq")  # rows-only: ANN recall < 1, not SQL-expressible
 def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC top-k search over the encoded corpus (module docstring has
-    the full design). Probe set = the `vec_id % 100 == 0` slice, the
-    same probes the exact/BLAS/LSH/IVF paths use, so the recall audit
-    compares like for like."""
+    the full design). Probe set = `_probe_block`, the same capped probes
+    the exact/BLAS/LSH/IVF paths use, so the recall audit compares like
+    for like."""
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -167,22 +169,8 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _encode_udf(books)(F.col("v")).alias("codes")
     )
 
-    # per-query ADC lookup tensor: LUT[q, m, j] = |q_sub_m − c_mj|².
-    # Probe materialization is HARD-CAPPED like q_sim_knn_blas's: the
-    # fetch takes MAX_PROBES+1 and raises instead of silently OOM-ing
-    # the driver on a corpus-proportional probe predicate.
-    q_rows = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .orderBy("vec_id")
-        .limit(MAX_PROBES + 1)
-        .collect()
-    )
-    if len(q_rows) > MAX_PROBES:
-        raise ValueError(
-            f"probe set exceeds MAX_PROBES={MAX_PROBES}; chunk the probes"
-        )
-    q_ids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    Q = np.asarray([r["v"] for r in q_rows], dtype=np.float64)
+    # per-query ADC lookup tensor: LUT[q, m, j] = |q_sub_m − c_mj|²
+    q_ids, Q = _probe_block(emb)
     lut = np.empty((len(q_ids), M_SUB, K_CODES))
     for m in range(M_SUB):
         qs = Q[:, m * d_sub : (m + 1) * d_sub]
@@ -190,7 +178,7 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         lut[:, m, :] = (diff * diff).sum(axis=2)
     # M×K×Q layout so the per-batch gather indexes by (subspace, code)
     bq = spark.sparkContext.broadcast((q_ids, lut.transpose(1, 2, 0).copy()))
-    k, r = TOP_K, RERANK * TOP_K
+    r = RERANK * TOP_K
 
     def topk_batches(it):
         ids, lut_mkq = bq.value
@@ -202,26 +190,10 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             # gather → (n, M, Q); sum over subspaces → (n, Q)
             D = lut_mkq[m_idx, codes, :].sum(axis=1)
             D[cids[:, None] == ids[None, :]] = np.inf  # self-match
-            out_q, out_c, out_d = [], [], []
-            for j in range(len(ids)):
-                col = D[:, j]
-                if len(col) > r:
-                    kth = col[np.argpartition(col, r - 1)[r - 1]]
-                    idx = np.flatnonzero(col <= kth)  # top-r ∪ boundary ties
-                else:
-                    idx = np.arange(len(col))
-                order = np.lexsort((cids[idx], col[idx]))[:r]
-                sel = idx[order]
-                sel = sel[np.isfinite(col[sel])]
-                out_q.append(np.full(len(sel), ids[j]))
-                out_c.append(cids[sel])
-                out_d.append(col[sel])
+            # nearest first: -D is exact, so order and ties are D's
+            qi, ci = _batch_top_k(-D, cids, r)
             yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "adc_d2": np.concatenate(out_d),
-                }
+                {"query_id": ids[qi], "cand_id": cids[ci], "adc_d2": D[ci, qi]}
             )
 
     partial = encoded.mapInPandas(
@@ -249,22 +221,10 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_v = emb.select(
         F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")
     )
-    cos = _dot(F.col("qv"), F.col("cv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv")))
-        * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    )
-    refined = (
+    return _top_k_cosine(
         shortlist.join(cand_v, "cand_id")
         .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "cand_id", cos.alias("cosine"))
-    )
-    w_cos = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        refined.withColumn("rn", F.row_number().over(w_cos))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "cand_id", F.round("cosine", 6).alias("cosine"))
+        .select("query_id", "cand_id", _cosine(F.col("qv"), F.col("cv")).alias("cosine"))
     )
 
 

@@ -46,6 +46,85 @@ def _dot(x: Column, y: Column) -> Column:
     )
 
 
+def _cosine(x: Column, y: Column) -> Column:
+    """The oracle's cosine: dot / (sqrt(x·x) · sqrt(y·y)), left-folded."""
+    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
+
+
+def _probes(emb: DataFrame) -> DataFrame:
+    """The probe set every search key queries: the `vec_id % 100 == 0`
+    slice of the corpus (the oracle SQL states the same predicate)."""
+    return emb.filter(F.col("vec_id") % 100 == 0)
+
+
+def _probe_block(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Probe ids and raw vectors ``(q_ids, Q)`` fetched once to the
+    driver over Arrow, for the kernels that broadcast the query block.
+
+    Driver-memory bound: the fetch takes ``MAX_PROBES + 1`` rows and
+    raises past ``MAX_PROBES`` instead of silently pulling a
+    corpus-proportional block through the driver (a "1% of corpus"
+    predicate grows with the corpus; a capped probe set does not).
+    Larger probe sets belong in q_sim_knn_exact's distributed
+    broadcast-join path, or in chunked sweeps of ≤ MAX_PROBES probes.
+    Row order is unspecified; every output is keyed by query_id."""
+    q_pdf = _probes(emb).limit(MAX_PROBES + 1).toPandas()
+    if len(q_pdf) > MAX_PROBES:
+        raise ValueError(
+            f"probe set exceeds MAX_PROBES={MAX_PROBES}; use the "
+            "distributed q_sim_knn_exact path or chunk the probes"
+        )
+    return q_pdf["vec_id"].to_numpy(dtype=np.int64), np.vstack(q_pdf["v"].to_numpy())
+
+
+def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two (n, dim) arrays (either may be one
+    broadcast row), accumulated DIMENSION-SEQUENTIALLY: each row's sum
+    adds its products in element order from 0.0, exactly the JVM
+    zip_with/aggregate left-fold of `_dot`, so every emitted dot, norm
+    and sign is bit-identical to it. BLAS matmul and np.linalg.norm use
+    pairwise summation, whose last bits differ — fine for selecting,
+    never for an emitted value."""
+    acc = np.zeros(np.broadcast_shapes(A.shape, B.shape)[0])
+    for t in range(A.shape[1]):
+        acc += A[:, t] * B[:, t]
+    return acc
+
+
+def _batch_top_k(S: np.ndarray, cids: np.ndarray, k: int):
+    """Per-batch partial top-k of a dense (batch × nq) score matrix:
+    returns flat ``(qi, ci)`` index arrays — for each query column, the
+    candidate rows of its k best scores under the final order (score
+    desc, cand_id asc), with ties at the k-th score resolved exactly
+    and -inf (masked) scores dropped. A batch's partial top-k per query
+    always contains that query's global top-k members from the batch,
+    so one final rank over |batches|·nq·k rows merges them."""
+    qi, ci = [], []
+    for j in range(S.shape[1]):
+        col = S[:, j]
+        if len(col) > k:
+            kth = col[np.argpartition(-col, k - 1)[k - 1]]
+            idx = np.flatnonzero(col >= kth)  # top-k ∪ boundary ties
+        else:
+            idx = np.arange(len(col))
+        sel = idx[np.lexsort((cids[idx], -col[idx]))[:k]]
+        sel = sel[np.isfinite(col[sel])]
+        qi.append(np.full(len(sel), j))
+        ci.append(sel)
+    return np.concatenate(qi), np.concatenate(ci)
+
+
+def _top_k_cosine(scored: DataFrame) -> DataFrame:
+    """The final rank every search key emits: per query_id the TOP_K
+    rows by (cosine desc, cand_id asc), cosine rounded to 6 places."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select("query_id", "cand_id", F.round("cosine", 6).alias("cosine"))
+    )
+
+
 def _queries_and_candidates(spark: SparkSession, sf_dir: str):
     """Query/candidate sides with norms precomputed *before* the pair
     join — each side's norm is evaluated once per vector instead of once
@@ -54,7 +133,7 @@ def _queries_and_candidates(spark: SparkSession, sf_dir: str):
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
-    q = emb.filter(F.col("vec_id") % 100 == 0).select(
+    q = _probes(emb).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.sqrt(_dot(F.col("v"), F.col("v"))).alias("qnorm"),
@@ -95,16 +174,10 @@ def q_sim_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query top-k via window rank with WindowGroupLimit pushdown."""
     q, c = _queries_and_candidates(spark, sf_dir)
     cos = _dot(F.col("qv"), F.col("cv")) / (F.col("qnorm") * F.col("cnorm"))
-    scored = (
+    return _top_k_cosine(
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id", cos.alias("cosine"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "cand_id", F.round("cosine", 6).alias("cosine"))
     )
 
 
@@ -113,130 +186,43 @@ def _projection_planes() -> list[list[float]]:
     return rng.standard_normal((N_PLANES, _DIM)).round(6).tolist()
 
 
-def _bucket_of(v: Column) -> Column:
-    """Sign-random-projection bucket id: bit i = sign(v · plane_i)."""
-    planes = _projection_planes()
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    v,
-                    F.array(*[F.lit(x) for x in plane]),
-                    lambda p, q: p * q,
-                ),
-                F.lit(0.0),
-                lambda acc, z: acc + z,
-            )
-            > 0,
-            F.lit(1 << i),
-        ).otherwise(0)
-        for i, plane in enumerate(planes)
-    ]
-    return sum(bits).alias("bucket")
-
-
 @register("q_sim_knn_blas", oracle=_KNN_ORACLE)
 def q_sim_knn_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k, BLAS path: the query block (1% of the corpus
-    by construction — the realistic shape for 'find neighbors of these
-    probes in 100 TB') is fetched once over Arrow and shipped to
-    executors as a TORRENT BROADCAST of the normalized NumPy matrix —
-    one copy per executor, not one per task closure, and never
-    re-serialized into every task like the r1/r2 closure-capture did.
-    Candidates stream through mapInPandas in Arrow batches and each
-    batch is one (batch × dim)·(dim × nq) matmul. Each batch emits only
-    its local top-k per query (ties at the boundary resolved exactly by
-    (cosine desc, cand_id asc)), so the final global window ranks
+    """Exact cosine top-k, BLAS path: the capped query block
+    (`_probe_block`) is fetched once and shipped to executors as a
+    TORRENT BROADCAST of the normalized NumPy matrix — one copy per
+    executor, not one per task closure. Candidates stream through
+    mapInPandas in Arrow batches and each batch is one
+    (batch × dim)·(dim × nq) matmul that only SELECTS: `_batch_top_k`
+    keeps each batch's local top-k per query, and the emitted cosine of
+    every kept pair is recomputed by `_seq_dot`, bit-identical to the
+    oracle's left-fold. The final rank (`_top_k_cosine`) then sees
     |batches|·nq·k rows, not |corpus|·nq. Same result set as
     q_sim_knn_exact ~10× faster — the matmul runs in vectorized native
-    code instead of an interpreted per-element fold.
-
-    Driver-memory bound (VERDICT r3): the probe block is materialized
-    on the driver to build the broadcast matrix, so it is HARD-CAPPED
-    at ``MAX_PROBES`` rows — the fetch takes ``MAX_PROBES + 1`` and
-    raises instead of silently OOM-ing if the probe predicate ever
-    selects more (a "1% of corpus" predicate is corpus-proportional at
-    100 TB; a capped probe set is not). Probe sets beyond the cap
-    belong in q_sim_knn_exact's fully-distributed broadcast-join path,
-    or in chunked sweeps of ≤MAX_PROBES probes."""
+    code instead of an interpreted per-element fold."""
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    # feed the matmul: small local partitions otherwise arrive as
-    # sub-1k Arrow batches that leave BLAS underfed
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-    q_pdf = (
-        emb.filter(F.col("vec_id") % 100 == 0).limit(MAX_PROBES + 1).toPandas()
-    )
-    if len(q_pdf) > MAX_PROBES:
-        raise ValueError(
-            f"probe set exceeds MAX_PROBES={MAX_PROBES}; use the "
-            "distributed q_sim_knn_exact path or chunk the probes"
-        )
-    q_ids = q_pdf["vec_id"].to_numpy(dtype=np.int64)
-    Q = np.vstack(q_pdf["v"].to_numpy())
+    q_ids, Q = _probe_block(emb)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     bq = spark.sparkContext.broadcast((q_ids, Qn, Q))
-    k = TOP_K
-
-    def _fold_cosine(qv, Cs):
-        """Cosines of one raw query row against the selected raw
-        candidate rows with dimension-SEQUENTIAL accumulation —
-        bit-identical to the oracle's left-fold LIST_DOT_PRODUCT /
-        (SQRT·SQRT) shape. BLAS matmul/np.linalg.norm use pairwise
-        summation, whose last bits differ from the fold; selection can
-        use the fast values, but the EMITTED value must be the
-        identical-derivation one (hash-parity discipline)."""
-        dim = Cs.shape[1]
-        dot = np.zeros(len(Cs))
-        cn2 = np.zeros(len(Cs))
-        qn2 = 0.0
-        for t in range(dim):
-            dot += Cs[:, t] * qv[t]
-            cn2 += Cs[:, t] * Cs[:, t]
-            qn2 += qv[t] * qv[t]
-        return dot / (np.sqrt(qn2) * np.sqrt(cn2))
 
     def topk_batches(it):
-        q_ids, Qn, Qraw = bq.value
+        q_ids, Qn, Q = bq.value
         for pdf in it:
             cids = pdf["vec_id"].to_numpy(dtype=np.int64)
             C = np.vstack(pdf["v"].to_numpy())
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            S = Cn @ Qn.T  # (batch, nq)
+            S = (C / np.linalg.norm(C, axis=1, keepdims=True)) @ Qn.T
             S[cids[:, None] == q_ids[None, :]] = -np.inf  # self-match
-            out_q, out_c, out_s = [], [], []
-            for j in range(len(q_ids)):
-                col = S[:, j]
-                if len(col) > k:
-                    kth = col[np.argpartition(-col, k - 1)[k - 1]]
-                    idx = np.flatnonzero(col >= kth)  # top-k ∪ boundary ties
-                else:
-                    idx = np.arange(len(col))
-                order = np.lexsort((cids[idx], -col[idx]))[:k]
-                sel = idx[order]
-                sel = sel[np.isfinite(col[sel])]
-                out_q.append(np.full(len(sel), q_ids[j]))
-                out_c.append(cids[sel])
-                out_s.append(_fold_cosine(Qraw[j], C[sel]))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "cosine": np.concatenate(out_s),
-                }
-            )
+            qi, ci = _batch_top_k(S, cids, TOP_K)
+            Qs, Cs = Q[qi], C[ci]
+            cos = _seq_dot(Qs, Cs) / (np.sqrt(_seq_dot(Qs, Qs)) * np.sqrt(_seq_dot(Cs, Cs)))
+            yield pd.DataFrame({"query_id": q_ids[qi], "cand_id": cids[ci], "cosine": cos})
 
-    partial = emb.mapInPandas(
-        topk_batches, "query_id long, cand_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "cand_id", F.round("cosine", 6).alias("cosine"))
+    return _top_k_cosine(
+        emb.mapInPandas(topk_batches, "query_id long, cand_id long, cosine double")
     )
 
 
@@ -247,66 +233,36 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the standard recall/cost lever). Deterministic (fixed-seed planes);
     recall vs exact asserted in tests, not oracle-checkable.
 
-    Physical shape (r14 optimization round, the q_sim_knn_blas path):
-    the former all-JVM formulation evaluated N_PLANES interpreted
-    zip_with/aggregate folds per CANDIDATE for bucketing plus one more
-    per surviving pair for the cosine — the guide's §4 UDF-boundary
-    case in reverse (interpreted expression trees where a vectorized
-    batch kernel belongs). Candidates now stream through mapInPandas:
-    per Arrow batch, bucket bits and cosines are computed by NumPy
-    loops over the dimension axis — DIMENSION-SEQUENTIAL accumulation,
-    the _fold_cosine discipline, so every dot, norm and sign is
-    bit-identical to the JVM left-fold — probe matching is one pandas
-    hash-join against the broadcast query probe table, and each batch
-    emits only its local top-k per query under the exact final order
-    (cosine desc, cand_id asc), so the JVM window ranks
-    |batches|·nq·k rows instead of every bucket-collision pair.
-    Driver memory stays O(MAX_PROBES) (the knn_blas hard cap)."""
+    Physical shape: candidates stream through mapInPandas against the
+    broadcast capped query block (`_probe_block`). Per Arrow batch,
+    bucket bits, norms and cosines come from `_seq_dot` —
+    dimension-sequential, so every dot, norm and sign is bit-identical
+    to the JVM left-fold — and probe matching is one pandas hash-join
+    against the query probe table, so only bucket-colliding pairs are
+    scored (never the dense batch × nq matrix). Each batch emits its
+    local top-k per query under the final order (cosine desc, cand_id
+    asc), and `_top_k_cosine` ranks |batches|·nq·k rows instead of
+    every bucket-collision pair."""
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-    q_pdf = (
-        emb.filter(F.col("vec_id") % 100 == 0).limit(MAX_PROBES + 1).toPandas()
-    )
-    if len(q_pdf) > MAX_PROBES:
-        raise ValueError(
-            f"probe set exceeds MAX_PROBES={MAX_PROBES}; use the "
-            "distributed q_sim_knn_exact path or chunk the probes"
-        )
-    q_ids = q_pdf["vec_id"].to_numpy(dtype=np.int64)
-    Q = np.vstack(q_pdf["v"].to_numpy())
+    q_ids, Q = _probe_block(emb)
     planes = np.asarray(_projection_planes())  # (N_PLANES, dim)
 
-    def _fold_buckets(M):
-        """Sign-projection bucket per row of M with dimension-sequential
-        fold per plane — bit-identical to the JVM zip_with/aggregate."""
-        dim = M.shape[1]
+    def buckets(M):
+        """Sign-projection bucket per row: bit i = sign(row · plane_i)."""
         b = np.zeros(len(M), dtype=np.int64)
-        for i in range(len(planes)):
-            acc = np.zeros(len(M))
-            for t in range(dim):
-                acc += M[:, t] * planes[i, t]
-            b |= (acc > 0).astype(np.int64) << i
+        for i, plane in enumerate(planes):
+            b |= (_seq_dot(M, plane[None, :]) > 0).astype(np.int64) << i
         return b
 
-    def _fold_sq(M):
-        """Dimension-sequential Σx², per row."""
-        s = np.zeros(len(M))
-        for t in range(M.shape[1]):
-            s += M[:, t] * M[:, t]
-        return s
-
-    qn2 = _fold_sq(Q)
-    home = _fold_buckets(Q)
     # multi-probe table: home bucket and every hamming-1 neighbor
     offs = np.array([0] + [1 << i for i in range(N_PLANES)], dtype=np.int64)
-    probe_b = (home[:, None] ^ offs[None, :]).ravel()
+    probe_b = (buckets(Q)[:, None] ^ offs[None, :]).ravel()
     probe_qi = np.repeat(np.arange(len(q_ids)), len(offs))
-    bq = spark.sparkContext.broadcast((q_ids, Q, qn2, probe_b, probe_qi))
-    k = TOP_K
+    bq = spark.sparkContext.broadcast((q_ids, Q, _seq_dot(Q, Q), probe_b, probe_qi))
 
     def score_batches(it):
         q_ids, Q, qn2, probe_b, probe_qi = bq.value
@@ -314,10 +270,8 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             cids = pdf["vec_id"].to_numpy(dtype=np.int64)
             C = np.vstack(pdf["v"].to_numpy())
-            cb = _fold_buckets(C)
-            cn2 = _fold_sq(C)
             pairs = pd.DataFrame(
-                {"ci": np.arange(len(cids)), "b": cb}
+                {"ci": np.arange(len(cids)), "b": buckets(C)}
             ).merge(probes, on="b")
             ci = pairs["ci"].to_numpy()
             qi = pairs["qi"].to_numpy()
@@ -325,39 +279,20 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ci, qi = ci[keep], qi[keep]
             if not len(ci):
                 continue
-            Cp, Qp = C[ci], Q[qi]
-            dot = np.zeros(len(ci))
-            for t in range(Cp.shape[1]):
-                dot += Cp[:, t] * Qp[:, t]
-            cos = dot / (np.sqrt(qn2[qi]) * np.sqrt(cn2[ci]))
-            out_q, out_c, out_s = [], [], []
-            order = np.lexsort((cids[ci], -cos, qi))  # qi, then final order
-            qi_s, ci_s, cos_s = qi[order], ci[order], cos[order]
-            starts = np.flatnonzero(
-                np.r_[True, qi_s[1:] != qi_s[:-1]]
-            )
-            ends = np.r_[starts[1:], len(qi_s)]
-            for s, e in zip(starts, ends):
-                sel = slice(s, min(s + k, e))
-                out_q.append(np.full(sel.stop - s, q_ids[qi_s[s]]))
-                out_c.append(cids[ci_s[sel]])
-                out_s.append(cos_s[sel])
+            cn2 = _seq_dot(C, C)
+            cos = _seq_dot(C[ci], Q[qi]) / (np.sqrt(qn2[qi]) * np.sqrt(cn2[ci]))
+            # per query (qi-sorted runs), the first k pairs in final order
+            order = np.lexsort((cids[ci], -cos, qi))
+            qi, ci, cos = qi[order], ci[order], cos[order]
+            starts = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
+            rank = np.arange(len(qi)) - np.repeat(starts, np.diff(np.r_[starts, len(qi)]))
+            top = rank < TOP_K
             yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "cosine": np.concatenate(out_s),
-                }
+                {"query_id": q_ids[qi[top]], "cand_id": cids[ci[top]], "cosine": cos[top]}
             )
 
-    partial = emb.mapInPandas(
-        score_batches, "query_id long, cand_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "cand_id", F.round("cosine", 6).alias("cosine"))
+    return _top_k_cosine(
+        emb.mapInPandas(score_batches, "query_id long, cand_id long, cosine double")
     )
 
 

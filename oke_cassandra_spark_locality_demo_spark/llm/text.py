@@ -1135,24 +1135,19 @@ def q_text_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     or machine-mangled text scores high even when its unigram profile
     is normal.
 
-    Scale shape (r14 optimization round — former shape was three corpus
-    explodes joined back on STRING keys): ONE explode emits each doc's
-    bigrams PLUS a pseudo-row (last token, NULL) — every token instance
-    is either some bigram's w1 or the doc's last token, so unigram
-    counts c1 AND the vocabulary size V ride the same pass with no
-    separate token explode. Keys collapse to xxhash64 longs before any
-    shuffle (the q_text_novelty/dedup-family convention; collision odds
-    ~pairs/2^64, documented there), counts aggregate per
-    (doc, w1h, w2h) so downstream moves distinct doc-bigrams, not
-    instances, and BOTH dictionary lookups become unordered-frame
-    windows over one w1h exchange — partitioning by w1h alone satisfies
-    the (w1h, w2h) window's clustering, so c2 and c1 share the exchange
-    and the two dictionary joins disappear. V is a row_number()==1 tag
-    summed over the same sort (no distinct aggregation); the scored
-    table is localCheckpointed (≤ distinct doc-bigrams rows) so the
-    V-scalar and the per-doc rollup don't re-derive the pipeline.
-    Per-instance nll sums become m·nll_e6 — identical exact integers,
-    since every instance of a (doc,w1,w2) group shares one nll_e6.
+    Scale shape (plans/r14/q_text_perplexity_bigram_after.txt): ONE
+    explode emits each doc's bigrams PLUS a pseudo-row (last token,
+    NULL) — every token instance is either some bigram's w1 or the
+    doc's last token, so unigram counts c1 and the vocabulary size V
+    come from the same exploded relation with no separate token
+    explode. Keys collapse to xxhash64 longs before any shuffle (the
+    q_text_novelty/dedup-family convention; collision odds
+    ~pairs/2^64). c2 is a hash aggregate per (w1h, w2h), c1 a second
+    aggregate of c2 per w1h, and V a count of c1's rows. Each bigram
+    instance then takes two hash joins (c2 on (w1h, w2h), c1 on w1h;
+    both broadcast in the sf0.1 plan) and a broadcast cross join with
+    V, and the per-doc rollup is one final aggregate. No windows and no checkpoint: the plan re-reads
+    the documents scan once per consumer.
     Float parity: each -ln-ratio term is rounded once to integer
     MICRO-units (coarse ≫ the 1-ulp ln() divergence across
     libm/fdlibm), summed exactly as BIGINT, and the mean is derived

@@ -1500,11 +1500,11 @@ def q_agg_sketch_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     below theta_min = min(hk_click, hk_purchase) has rank < k in both
     segments (h < hk ⇒ at most k−1 hashes precede it), so it is
     provably IN both sketches iff its item carries both segments; the
-    count rides the same boolean filter. The user-day table is
-    localCheckpointed (kruskal/heavy-hitters discipline) so its four
-    consumers re-read ~distinct-user-day rows instead of re-running
-    the events aggregation; pre-checkpoint plan fragment dumped per
-    the plans/r14 policy."""
+    count rides the same boolean filter. The user-day table is not
+    checkpointed: each of its four consumers (per-segment exact count,
+    the two sketch passes, the intersection aggregate) re-derives it
+    from its own events scan, one exchange each
+    (plans/r14/q_agg_sketch_theta_after.txt)."""
     e = load(spark, sf_dir, "events")
     ud = (
         e.groupBy("user_id", F.col("ts").cast("date").alias("d"))

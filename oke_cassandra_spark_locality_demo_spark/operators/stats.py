@@ -177,19 +177,19 @@ def q_stats_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")).alias("tc")
     )
     rows = grp.crossJoin(F.broadcast(tie)).collect()
-    moments = {r["g"]: (r["n"], r["r2"]) for r in rows}
-    # empty input leaves the crossJoin with zero rows (ADVICE r13): the
-    # old standalone 1-row aggregate always returned a (null) tc row
-    tcorr = rows[0]["tc"] if rows else 0
-    nn = float(sum(n for n, _ in moments.values()))
-    sum_term = None
-    for gname in ["1", "2", "3", "4", "5"]:
-        n_g, r2_g = moments[gname]
-        term = float(r2_g) * float(r2_g) / (4.0 * float(n_g))
-        sum_term = term if sum_term is None else sum_term + term
-    h = (12.0 / (nn * (nn + 1.0)) * sum_term - 3.0 * (nn + 1.0)) / (
-        1.0 - float(tcorr) / (nn * nn * nn - nn)
-    )
+    h = None  # empty input: no groups, so the frame below is empty
+    if rows:
+        moments = {r["g"]: (r["n"], r["r2"]) for r in rows}
+        tcorr = rows[0]["tc"]
+        nn = float(sum(n for n, _ in moments.values()))
+        sum_term = None
+        for gname in ["1", "2", "3", "4", "5"]:
+            n_g, r2_g = moments[gname]
+            term = float(r2_g) * float(r2_g) / (4.0 * float(n_g))
+            sum_term = term if sum_term is None else sum_term + term
+        h = (12.0 / (nn * (nn + 1.0)) * sum_term - 3.0 * (nn + 1.0)) / (
+            1.0 - float(tcorr) / (nn * nn * nn - nn)
+        )
     return (
         grp.select(
             F.col("g").alias("grp"),

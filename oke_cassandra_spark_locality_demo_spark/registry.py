@@ -279,48 +279,18 @@ _DRIVER_ADJUDICATED = frozenset(_DRIVER_ADJUDICATED_ORDERED)
 #: adjudication (ADVICE r3: a rewrite back-listed behind
 #: _DRIVER_ADJUDICATED would never be re-graded externally). This
 #: guard is permanent: reset the list each round to the keys actually
-#: touched. Round 13 (VERDICT/ADVICE r12): q_dedup_containment's k=2
-#: asymmetric prefix-filter branch landed in the r12 CLOSING commit,
-#: after CORRECTNESS_r12's sample was drawn, so its rework has no
-#: external verdict yet (VERDICT r12 item 1 / ADVICE r12 item 1) —
-#: fronted now that its dense-corpus brute-force parity tests are in
-#: (tests/test_llm_ops.py TestGeneralizedPrefixFilter). The streaming
-#: keys are fronted for the ADVICE r12 reaper fix on their shared
-#: staging path (streaming/runtime.py: skip stamp creation for a
-#: directory reaped earlier in the same pass — results-invariant by
-#: design; fronting proves it externally).
+#: touched.
 _MODIFIED_THIS_ROUND: list[str] = [
-    # llm/dedup.py q_dedup_containment: k=2 branch landed post-sample
-    # in r12 (brute-force parity + starvation tests added this
-    # round), and r13 additionally reworked the query's k=1 cost
-    # (shared-shingle-slot source, per-corpus density memo, memoized
-    # common table — bench r13 caught the r12 density probe doubling
-    # the query's sf0.1 cost)
-    "q_dedup_containment",
-    # llm/dedup.py density memo threading (_prefix_k/_rarity_prefix
-    # signatures): shared by the whole generalized-prefix family —
-    # results-invariant by design (the scalar is the same number,
-    # just cached); fronting proves it externally
-    "q_dedup_ngram_jaccard", "q_dedup_ngram_prefix",
-    "q_dedup_incremental_fuzzy", "q_split_leakage",
-    "q_dedup_clusters", "q_dedup_minhash_audit",
-    # streaming/runtime.py stage reaper: same-pass orphan-stamp fix —
-    # shared staging path of every streaming key
-    "q_stream_tumbling", "q_stream_sliding", "q_stream_session",
-    "q_stream_multires", "q_stream_watermark_late", "q_stream_dedup",
-    "q_stream_stateful", "q_stream_sink", "q_stream_foreach_batch",
-    "q_stream_cdc_upsert", "q_stream_join_static",
-    "q_stream_join_interval", "q_stream_join_outer",
-    "q_stream_join_semi", "q_stream_stateful_tws",
-    # r13 OPTIMIZATION-round reworks (OPTIMIZATION_r13.md has the
-    # measurement + equivalence evidence per key; every one re-driven
-    # green at sf0.01 + sf0.1 builder-side, fronted for the external
-    # verdict): plan restructures that must not change results.
-    "q_dedup_simhash", "q_dedup_minhash", "q_dedup_span",
-    "q_geo_knn", "q_select_dsir",
-    "q_drift_ks", "q_classify_nb", "q_agg_heavy_hitters",
-    "q_text_novelty", "q_stats_kruskal",
-    "q_tpch_q17", "q_tpch_q20", "q_tpch_q21",
+    # llm/similarity.py, pq.py, ivf.py: one shared probe predicate,
+    # probe fetch, batch top-k, sequential fold and final cosine rank,
+    # and no session write of the Arrow batch size
+    "q_sim_knn_exact", "q_sim_knn_blas", "q_sim_lsh", "q_sim_pq",
+    "q_sim_ivf", "q_sim_lsh_audit", "q_sim_pq_audit", "q_sim_ivf_audit",
+    "q_sim_ivf_index",
+    # operators/stats.py: empty input returns the empty frame
+    "q_stats_kruskal",
+    # r14 reworks that no driver verdict covers yet
+    "q_agg_sketch_theta", "q_text_perplexity_bigram",
 ]
 
 #: One-time rotation priority — RETIRED as of r10 (every oracle-backed

@@ -17,6 +17,17 @@ from pyspark.sql import SparkSession
 from .conf import shuffle_partitions_for
 
 
+def _default_driver_mem() -> str:
+    """24g, capped at half of the host's MemTotal: a heap larger than
+    RAM turns spill into an OOM kill."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def build_session(
     app_name: str = "spark-graft",
     master: str | None = None,
@@ -28,7 +39,8 @@ def build_session(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``) so the driver's bench harness controls parallelism. On a
     real cluster the caller passes the cluster master URL and the same
-    engine confs apply unchanged.
+    engine confs apply unchanged. The driver heap is
+    ``$SPARK_GRAFT_DRIVER_MEM`` if set, else ``_default_driver_mem()``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -49,7 +61,7 @@ def build_session(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -16,8 +16,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="spark-graft-tests", master="local[8]",
-                      shuffle_partitions=8)
+    # master and shuffle partitions follow $SPARK_GRAFT_CPUS (the host)
+    s = build_session(app_name="spark-graft-tests")
     yield s
 
 

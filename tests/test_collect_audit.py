@@ -16,7 +16,7 @@ the JVM-side aggregate expression, not DataFrame.first().)
 Every entry's bound was established in the r4-r6 plan audits:
 scalars, ≤group-count folds (groups are fixed-cardinality dims:
 25 nations, 5 regions, k≤32 clusters), or dim²-bounded Gram matrices
-with a documented distributed fallback (similarity.py:563).
+with a documented distributed fallback (similarity._pca_power_iteration).
 """
 
 from __future__ import annotations
@@ -72,13 +72,13 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("llm/pq.py", "train_codebooks"): (
         "k x m codebook entries (k=16, m=4) per round, twice"
     ),
-    ("llm/pq.py", "q_sim_pq"): "query vector: exactly 1 row",
-    ("llm/similarity.py", "q_sim_knn_blas"): (
-        "capped probe block: TOP_PROBES rows (constant), Arrow-fetched"
+    ("llm/similarity.py", "_probe_block"): (
+        "probe block of the vector-search kernels: fetches at most "
+        "MAX_PROBES + 1 rows and raises past MAX_PROBES"
     ),
     ("llm/similarity.py", "_pca_power_iteration"): (
         "dim x dim Gram matrix (dim=8 fixture, 768 prod = 4.7 MB); "
-        "distributed fallback documented at similarity.py:563"
+        "distributed fallback documented in its docstring"
     ),
     ("llm/text.py", "exact_topk_candidate_prune"): (
         "TPUT thresholds (scalars) + certified candidate ids (<= k + "

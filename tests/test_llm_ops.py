@@ -351,16 +351,18 @@ def test_hll_sketch_rollup_close_to_exact(spark, sf_dir):
 
 
 def test_knn_blas_probe_cap_raises(spark, sf_dir, monkeypatch):
-    """The BLAS kNN driver-side probe materialization is hard-capped:
-    past MAX_PROBES it must RAISE, never silently pull a
-    corpus-proportional block through the driver (VERDICT r3 item 5)."""
+    """The driver-side probe block (similarity._probe_block) that the
+    BLAS kNN, LSH and PQ kernels broadcast is hard-capped: past
+    MAX_PROBES it must RAISE, never silently pull a corpus-proportional
+    block through the driver (VERDICT r3 item 5)."""
     import pytest
 
     from oke_cassandra_spark_locality_demo_spark.llm import similarity
 
     monkeypatch.setattr(similarity, "MAX_PROBES", 2)
-    with pytest.raises(ValueError, match="MAX_PROBES"):
-        get("q_sim_knn_blas").fn(spark, sf_dir)
+    for key in ("q_sim_knn_blas", "q_sim_lsh", "q_sim_pq"):
+        with pytest.raises(ValueError, match="MAX_PROBES"):
+            get(key).fn(spark, sf_dir)
 
 
 def test_ngram_memo_bounded_and_reused(spark, sf_dir):
@@ -1780,10 +1782,18 @@ def test_lsh_rework_parity_vs_reference_formulation(spark, sf_dir):
     from oke_cassandra_spark_locality_demo_spark.llm.similarity import (
         N_PLANES,
         TOP_K,
-        _bucket_of,
         _dot,
+        _projection_planes,
         _queries_and_candidates,
     )
+
+    def _bucket_of(v):
+        """Sign-random-projection bucket id: bit i = sign(v · plane_i)."""
+        return sum(
+            F.when(_dot(v, F.array(*[F.lit(x) for x in plane])) > 0, F.lit(1 << i))
+            .otherwise(0)
+            for i, plane in enumerate(_projection_planes())
+        )
 
     q, c = _queries_and_candidates(spark, sf_dir)
     probe_offsets = F.array(F.lit(0), *[F.lit(1 << i) for i in range(N_PLANES)])

@@ -450,67 +450,6 @@ def test_incremental_mv_edges_match_recompute(spark):
 # Arrow batch-size invariance (round 9)
 # ---------------------------------------------------------------------------
 
-#: Registry keys whose physical plan contains an Arrow-batched Python
-#: node (MapInPandas / FlatMap[Co]GroupsInPandas / ArrowEvalPython /
-#: AggregateInPandas / MapInArrow), as detected by
-#: tools/arrow_batch_probe.py at the round-9 HEAD, PLUS the two
-#: streaming keys whose applyInPandasWithState / transformWithState
-#: execution runs eagerly inside fn() where plan inspection can't see
-#: it. Re-run the probe and update this pin when an Arrow call site is
-#: added or removed (the call-site census below fails first).
-_ARROW_BATCHED_KEYS = [
-    "q_multimodal_phash", "q_multimodal_audio_energy",
-    "q_multimodal_scenecut", "q_udf_pandas", "q_udf_grouped_agg",
-    "q_udf_cogroup", "q_udf_arrow", "q_export_webdataset",
-    "q_sim_knn_blas", "q_sim_ivf_audit", "q_text_compress_ratio",
-    "q_multimodal_binary", "q_multimodal_frames", "q_multimodal_resize",
-    "q_sim_ivf", "q_sim_pq", "q_sim_pq_audit",
-    # r11: real PNG encode+decode, two mapInPandas stages
-    "q_multimodal_decode_real",
-    # eager streaming (plan-invisible, still Arrow-batched):
-    "q_stream_stateful", "q_stream_stateful_tws",
-]
-
-#: Per-module census of REAL Arrow API call sites, each qualified by
-#: its ENCLOSING FUNCTION ("func[.nested]:api" — AST attribute/name
-#: hits for mapInPandas / applyInPandas / mapInArrow / applyInArrow /
-#: applyInPandasWithState / transformWithStateInPandas / pandas_udf;
-#: docstring mentions don't count). Function-qualified, not bare
-#: counts (ADVICE r9): moving an Arrow call from one query to another
-#: within the same module keeps a count census identical while
-#: silently staling _ARROW_BATCHED_KEYS — the qualified census drifts
-#: on any such move. If this pin fails, re-run
-#: tools/arrow_batch_probe.py and update BOTH pins from its output.
-_ARROW_CALL_SITES = {
-    "functions/udf.py": [
-        "_zscore_denom:pandas_udf", "q_udf_arrow:mapInArrow",
-        "q_udf_cogroup:applyInPandas", "q_udf_grouped_agg:applyInPandas",
-    ],
-    "llm/ivf.py": [
-        "_assign_udf.assign:pandas_udf", "_probe_udf.probes:pandas_udf",
-    ],
-    "llm/multimodal.py": [
-        "q_multimodal_audio_energy:mapInPandas",
-        "q_multimodal_binary:mapInPandas",
-        # r11 real-decode tier: encode stage + decode stage
-        "q_multimodal_decode_real:mapInPandas",
-        "q_multimodal_decode_real:mapInPandas",
-        "q_multimodal_frames:mapInPandas",
-        "q_multimodal_phash:mapInPandas",
-        "q_multimodal_resize:mapInPandas",
-        "q_multimodal_scenecut:mapInPandas",
-    ],
-    "llm/pq.py": ["_encode_udf.encode:pandas_udf", "q_sim_pq:mapInPandas"],
-    "llm/similarity.py": ["q_sim_knn_blas:mapInPandas"],
-    "llm/text.py": ["q_text_compress_ratio:pandas_udf"],
-    "sources/ingest.py": ["q_export_webdataset:applyInPandas"],
-    "streaming/stateful.py": [
-        "q_stream_stateful.xf:applyInPandasWithState",
-        "q_stream_stateful_tws.xf:applyInPandasWithState",
-        "q_stream_stateful_tws.xf:transformWithStateInPandas",
-    ],
-}
-
 _ARROW_API_ATTRS = {
     "mapInPandas", "applyInPandas", "mapInArrow", "applyInArrow",
     "applyInPandasWithState", "transformWithStateInPandas",
@@ -518,63 +457,75 @@ _ARROW_API_ATTRS = {
 }
 
 
-def test_arrow_call_site_census_matches_pin():
-    """Mechanized sync guard for _ARROW_BATCHED_KEYS: walk every
-    package module's AST and record each genuine Arrow API call site
-    with its enclosing function. Any drift — including moving a call
-    between functions of the same module, which a bare count misses
-    (ADVICE r9) — means the probe pin above is stale; the failure
-    message says exactly what to re-run."""
+def _arrow_derivation():
+    """Derive the Arrow batch-size sweep from the package source.
+
+    One AST pass over every package module records, per top-level
+    function, the names it mentions (``ast.Name`` ids and attribute
+    names, nested functions included; docstrings are constants and do
+    not count) and its ``@register("key")`` keys. A top-level function
+    is Arrow-batched if it names an ``_ARROW_API_ATTRS`` API, or names
+    another Arrow-batched top-level function (a fixpoint; names are
+    matched package-wide, which can only over-include). Eager Arrow
+    execution inside a builder (the streaming keys' applyInPandas*
+    runs) is found the same way, with no plan inspection.
+
+    Returns ``(keys, direct, reached)``: the swept registry keys, the
+    functions that name an Arrow API directly (``"<module>"`` for a
+    call outside any top-level function), and every function a swept
+    key's builder reaches by name."""
     import ast
     import os
 
     import oke_cassandra_spark_locality_demo_spark as pkg
 
-    class _Census(ast.NodeVisitor):
-        def __init__(self):
-            self.stack: list[str] = []
-            self.hits: list[str] = []
+    refs: dict[str, set[str]] = {}
+    keys: dict[str, list[str]] = {}
+    direct: set[str] = set()
+    for root, _, files in os.walk(os.path.dirname(pkg.__file__)):
+        for fname in (f for f in files if f.endswith(".py")):
+            with open(os.path.join(root, fname)) as fh:
+                tree = ast.parse(fh.read())
+            for node in tree.body:
+                names = {
+                    getattr(n, "id", None) or getattr(n, "attr", None)
+                    for n in ast.walk(node)
+                    if isinstance(n, (ast.Name, ast.Attribute))
+                }
+                if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    if names & _ARROW_API_ATTRS:
+                        direct.add("<module>")
+                    continue
+                refs.setdefault(node.name, set()).update(names)
+                if names & _ARROW_API_ATTRS:
+                    direct.add(node.name)
+                keys.setdefault(node.name, []).extend(
+                    d.args[0].value
+                    for d in node.decorator_list
+                    if isinstance(d, ast.Call)
+                    and getattr(d.func, "id", None) == "register"
+                )
+    batched = set(direct)
+    while grown := {f for f, r in refs.items() if r & batched} - batched:
+        batched |= grown
+    swept = {f for f in batched if keys.get(f)}
+    reached = set(swept)
+    while grown := {g for f in reached for g in refs[f] if g in refs} - reached:
+        reached |= grown
+    return sorted(k for f in swept for k in keys[f]), direct, reached
 
-        def _func(self, node):
-            self.stack.append(node.name)
-            self.generic_visit(node)
-            self.stack.pop()
 
-        visit_FunctionDef = _func
-        visit_AsyncFunctionDef = _func
+def test_every_arrow_call_site_reaches_a_swept_key():
+    """Guard for the derived sweep: every function that names an Arrow
+    API must be reached from some swept key's builder — an Arrow kernel
+    no registered query runs (or one called at module level) would
+    otherwise never see the 7-row batches."""
+    from oke_cassandra_spark_locality_demo_spark import registry
 
-        def _hit(self, api):
-            scope = ".".join(self.stack) or "<module>"
-            self.hits.append(f"{scope}:{api}")
-
-        def visit_Attribute(self, node):
-            if node.attr in _ARROW_API_ATTRS:
-                self._hit(node.attr)
-            self.generic_visit(node)
-
-        def visit_Name(self, node):
-            if node.id in _ARROW_API_ATTRS:
-                self._hit(node.id)
-            self.generic_visit(node)
-
-    pkg_dir = os.path.dirname(pkg.__file__)
-    got: dict[str, list[str]] = {}
-    for root, _, files in os.walk(pkg_dir):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, pkg_dir)
-            with open(path) as fh:
-                census = _Census()
-                census.visit(ast.parse(fh.read()))
-            if census.hits:
-                got[rel] = sorted(census.hits)
-    assert got == _ARROW_CALL_SITES, (
-        "Arrow API call-site census drifted — run "
-        "`python tools/arrow_batch_probe.py` and update "
-        f"_ARROW_CALL_SITES + _ARROW_BATCHED_KEYS. census={got}"
-    )
+    keys, direct, reached = _arrow_derivation()
+    assert not direct - reached, f"Arrow call sites no swept key reaches: {direct - reached}"
+    known = set(registry.all_queries())
+    assert keys and set(keys) <= known, set(keys) - known
 
 
 def test_arrow_batch_size_invariance(spark, sf_dir):
@@ -594,22 +545,25 @@ def test_arrow_batch_size_invariance(spark, sf_dir):
 
     from .parity import _canon
 
-    prev = spark.conf.get(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
-    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf, "10000")
+    keys, _, _ = _arrow_derivation()
     try:
         results: dict[str, list] = {}
         for batch in ("10000", "7"):
-            spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", batch
-            )
-            for name in _ARROW_BATCHED_KEYS:
+            spark.conf.set(conf, batch)
+            for name in keys:
                 rows = sorted(
                     (
                         tuple(_canon(v) for v in r)
                         for r in registry.get(name).fn(spark, sf_dir).collect()
                     ),
                     key=_row_key,
+                )
+                # a builder that writes the batch size into the shared
+                # session silently un-sweeps every key after it
+                assert spark.conf.get(conf) == batch, (
+                    f"{name} changed {conf} to {spark.conf.get(conf)}"
                 )
                 results.setdefault(name, []).append(rows)
         diffs = [n for n, (a, b) in results.items() if a != b]
@@ -618,7 +572,7 @@ def test_arrow_batch_size_invariance(spark, sf_dir):
         empty = [n for n, (a, _) in results.items() if not a]
         assert not empty, f"swept keys returned 0 rows: {empty}"
     finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+        spark.conf.set(conf, prev)
 
 
 def test_engine_mode_invariance_pin(spark, sf_dir):

@@ -54,6 +54,18 @@ def test_kruskal_matches_bruteforce(spark, sf_dir):
         assert rows[g]["r2"] == round(2 * sum(avg_rank[x] for x in vals))
 
 
+def test_kruskal_empty_input_returns_empty_frame(spark, sf_dir, tmp_path):
+    """No orders means no groups and no H: the query returns its
+    5-column frame with zero rows instead of raising."""
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(f"{sf_dir}/orders.parquet")
+    pq.write_table(schema.empty_table(), str(tmp_path / "orders.parquet"))
+    df = _queries()["q_stats_kruskal"](spark, str(tmp_path))
+    assert df.columns == ["grp", "n", "r2", "mean_rank_micro", "h_micro"]
+    assert df.collect() == []
+
+
 def test_anova_matches_bruteforce(spark, sf_dir):
     df = _queries()["q_stats_anova_f"](spark, sf_dir)
     rows = {r["grp"]: r for r in df.collect()}

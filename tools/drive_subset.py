@@ -4,9 +4,8 @@ drive_contract.py run doesn't label: pre-adjudication checks of an
 upcoming rotation block, multi-scale coverage of a named key list,
 or a quick re-grade after a localized change.
 
-Keys come from argv; ``--remaining`` substitutes the current
-never-adjudicated set (tools/rotation_remaining.py's list), which is
-exactly the r10 rotation tail while the rotation is still live.
+Keys come from argv; ``--remaining`` substitutes the keys not yet in
+registry._DRIVER_ADJUDICATED.
 Rows-only keys (no oracle_sql entry) get the same >0-rows check the
 external driver applies.
 
