@@ -174,7 +174,7 @@ def q_scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet with DuckDB's filename=true — both engines must attribute
     every row to the same physical file.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load(spark, sf_dir, "lineitem")
     return (
         li.select("l_orderkey", F.col("_metadata.file_name").alias("file_name"))
         .groupBy("file_name")

@@ -154,41 +154,36 @@ def _load_all() -> None:
 #: free capacity is always a rolling re-adjudication of the stalest
 #: external verdicts. As of r10 the one-time rotation is complete
 #: (every key graded at least once) and this list holds all 401 keys
-#: (r13 bookkeeping: r12's 50 graded keys moved to the tail in
-#: CORRECTNESS_r12 order, per the standing playbook): r1-r9 grades
-#: first (minus keys re-graded later), then the r10/r11 blocks, then
-#: the r12 block at the tail.
+#: (each round's graded keys moved to the tail in its CORRECTNESS
+#: order, per the standing playbook): r1-r9 grades first (minus keys
+#: re-graded later), then the r10/r11/r12 blocks, then the r13 block,
+#: which r14 graded again in the same order, at the tail.
 _DRIVER_ADJUDICATED_ORDERED = (
     """
-    q_fn_array q_fn_map q_vec_centroid q_vec_quantize
-    q_retention_cohorts q_udf_cogroup q_agg_weighted
-    q_agg_multi_distinct q_agg_listagg q_agg_grouping_id
-    q_agg_higher_moments q_agg_approx_quantile q_win_rank
-    q_win_analytic q_win_frame_rows q_win_frame_range
-    q_funnel_conversion q_topk_per_group q_win_distribution q_cdc_apply
-    q_scd2_dimension q_win_streaks q_win_time_weighted q_gapfill_locf
-    q_win_attribution q_win_transitions q_sort_multi q_limit q_topk
-    q_sort_zorder q_union q_union_distinct q_intersect q_except
-    q_snapshot_diff q_meta_tables q_quality_audit q_profile_columns
-    q_subqueries q_recursive_cte q_join_lateral q_sql_pipe q_sql_params
-    q_sim_knn_blas q_sample_weighted q_mix_sources q_split_train_test
+    q_win_frame_range q_funnel_conversion q_topk_per_group
+    q_win_distribution q_cdc_apply q_scd2_dimension q_win_streaks
+    q_win_time_weighted q_gapfill_locf q_win_attribution
+    q_win_transitions q_sort_multi q_limit q_topk q_sort_zorder q_union
+    q_union_distinct q_intersect q_except q_snapshot_diff q_meta_tables
+    q_quality_audit q_profile_columns q_subqueries q_recursive_cte
+    q_join_lateral q_sql_pipe q_sql_params q_sim_knn_blas
+    q_sample_weighted q_mix_sources q_split_train_test
     q_split_drift_chisq q_feature_rare_collapse q_text_stats
     q_text_redact q_text_repetition q_fn_string q_fn_math q_fn_json
     q_fn_cast_decimal q_dedup_exact q_dedup_entity q_dedup_incremental
-    q_sim_knn_exact q_sim_pairwise_label q_sim_lsh_audit
-    q_sim_ivf_audit q_text_quality q_text_langid q_text_tokens
-    q_text_fingerprint q_text_chunk q_text_tfidf q_text_clean
-    q_text_url_extract q_text_pmi q_text_entropy q_text_perplexity
-    q_multimodal_cols q_multimodal_binary q_multimodal_frames
-    q_pipeline_e2e q_udf_python q_multimodal_resize q_sim_ivf q_sim_pq
-    q_sim_pq_audit q_vec_pca q_pack_sequences q_stream_pyds
-    q_udf_pandas q_udf_grouped_agg q_udf_arrow q_udtf q_udtf_python
-    q_source_pyds_scan q_source_pyds_lookup q_insert_upsert
-    q_meta_engine_info q_tpch_q1 q_tpch_q3 q_tpch_q5 q_tpch_q6
-    q_tpch_q9 q_tpch_q18 q_tpch_q21 q_privacy_dp_count q_tpch_q2
-    q_tpch_q4 q_tpch_q7 q_tpch_q8 q_tpch_q10 q_tpch_q11 q_tpch_q12
-    q_tpch_q13 q_tpch_q14 q_tpch_q15 q_tpch_q16 q_tpch_q17 q_tpch_q19
-    q_tpch_q20 q_tpch_q22 q_agg_sketch_cms q_agg_sketch_theta
+    q_sim_knn_exact q_sim_pairwise_label q_sim_lsh_audit q_sim_ivf_audit
+    q_text_quality q_text_langid q_text_tokens q_text_fingerprint
+    q_text_chunk q_text_tfidf q_text_clean q_text_url_extract q_text_pmi
+    q_text_entropy q_text_perplexity q_multimodal_cols
+    q_multimodal_binary q_multimodal_frames q_pipeline_e2e q_udf_python
+    q_multimodal_resize q_sim_ivf q_sim_pq q_sim_pq_audit q_vec_pca
+    q_pack_sequences q_stream_pyds q_udf_pandas q_udf_grouped_agg
+    q_udf_arrow q_udtf q_udtf_python q_source_pyds_scan
+    q_source_pyds_lookup q_insert_upsert q_meta_engine_info q_tpch_q1
+    q_tpch_q3 q_tpch_q5 q_tpch_q6 q_tpch_q9 q_tpch_q18
+    q_privacy_dp_count q_tpch_q2 q_tpch_q4 q_tpch_q7 q_tpch_q8
+    q_tpch_q10 q_tpch_q11 q_tpch_q12 q_tpch_q13 q_tpch_q14 q_tpch_q15
+    q_tpch_q16 q_tpch_q19 q_tpch_q22 q_agg_sketch_cms q_agg_sketch_theta
     q_agg_sketch_moments q_agg_bitmap_distinct q_agg_bitmap_overlap
     q_mv_incremental q_merge_multi_action q_sessionize q_join_bloom
     q_text_bm25 q_text_zipf q_shuffle_epoch q_win_ewma
@@ -200,11 +195,11 @@ _DRIVER_ADJUDICATED_ORDERED = (
     q_fn_split_part q_graph_triangles q_graph_common_neighbors
     q_graph_assortativity q_graph_modularity q_graph_2hop_reach
     q_graph_degree_powerlaw q_graph_neighbor_sample q_geo_radius_join
-    q_geo_knn q_geo_grid_density q_stats_kruskal q_stats_anova_f
-    q_stats_cohen_kappa q_stats_kaplan_meier q_stats_levene
-    q_stats_spearman q_ts_backtest_snaive q_stats_gtest q_stats_mcnemar
-    q_stats_overdispersion q_stats_wilcoxon q_ts_changepoint
-    q_stats_ess q_privacy_kanon q_privacy_ldiversity q_privacy_tclose
+    q_geo_grid_density q_stats_anova_f q_stats_cohen_kappa
+    q_stats_kaplan_meier q_stats_levene q_stats_spearman
+    q_ts_backtest_snaive q_stats_gtest q_stats_mcnemar
+    q_stats_overdispersion q_stats_wilcoxon q_ts_changepoint q_stats_ess
+    q_privacy_kanon q_privacy_ldiversity q_privacy_tclose
     q_privacy_suppress q_privacy_uniqueness q_text_bpe_train
     q_text_bpe_encode q_text_bpe_fertility q_rank_rrf q_rank_eval
     q_rank_tau q_rank_ndcg q_join_asof_tolerance q_join_asof_nearest
@@ -216,59 +211,64 @@ _DRIVER_ADJUDICATED_ORDERED = (
     q_agg_hist_equidepth q_agg_vwap q_agg_rfm q_agg_percent_of_parent
     q_agg_mix_shift q_agg_linreg2 q_agg_purchase_gaps
     q_agg_growth_accounting q_agg_abc_xyz q_agg_cr4 q_agg_theil
-    q_agg_arpu q_win_rolling_median q_pareto_frontier
-    q_ts_downsample_m4 q_drift_cusum q_ts_autocorr q_ts_seasonal_dow
-    q_win_rolling_slope q_ts_outlier_rolling q_agg_cohort_ltv
-    q_funnel_multistep q_win_time_to_convert q_win_drawdown
-    q_ts_interpolate_linear q_ts_resample_weekly q_win_path_topk
-    q_win_distinct_bitmask q_win_concurrency_sweep q_ts_new_users
-    q_win_rsi q_ts_wau q_fraud_double_charge q_win_rolling_corr
-    q_ts_dau_mau q_intersect_all q_except_all q_profile_skew
-    q_fn_sql_udf q_sql_group_by_all q_sql_qualify q_sql_window_clause
+    q_agg_arpu q_win_rolling_median q_pareto_frontier q_ts_downsample_m4
+    q_drift_cusum q_ts_autocorr q_ts_seasonal_dow q_win_rolling_slope
+    q_ts_outlier_rolling q_agg_cohort_ltv q_funnel_multistep
+    q_win_time_to_convert q_win_drawdown q_ts_interpolate_linear
+    q_ts_resample_weekly q_win_path_topk q_win_distinct_bitmask
+    q_win_concurrency_sweep q_ts_new_users q_win_rsi q_ts_wau
+    q_fraud_double_charge q_win_rolling_corr q_ts_dau_mau
+    q_intersect_all q_except_all q_profile_skew q_fn_sql_udf
+    q_sql_group_by_all q_sql_qualify q_sql_window_clause
     q_sql_distinct_on q_export_manifest q_dedup_priority q_dedup_url
     q_vec_jl_projection q_text_boilerplate q_text_perplexity_bigram
-    q_text_novelty q_quality_gopher q_text_rake q_agg_heavy_hitters
-    q_text_dechunk q_text_langid_eval q_text_autocomplete q_text_hapax
-    q_text_burstiness q_text_readability q_text_script_mix
-    q_text_vocab_overlap q_multimodal_phash q_multimodal_audio_energy
+    q_quality_gopher q_text_rake q_text_dechunk q_text_langid_eval
+    q_text_autocomplete q_text_hapax q_text_burstiness
+    q_text_readability q_text_script_mix q_text_vocab_overlap
+    q_multimodal_phash q_multimodal_audio_energy
     q_multimodal_dedup_bytes q_multimodal_scenecut
-    q_multimodal_payload_entropy q_corpus_card q_drift_ks q_classify_nb
-    q_stats_mannwhitney q_agg_gini q_stats_welch_ttest
-    q_stats_permutation q_stats_bootstrap_ci q_drift_jsd
-    q_stats_runs_test q_split_kfold_grouped q_source_csv q_source_json
+    q_multimodal_payload_entropy q_corpus_card q_stats_mannwhitney
+    q_agg_gini q_stats_welch_ttest q_stats_permutation
+    q_stats_bootstrap_ci q_drift_jsd q_stats_runs_test
+    q_split_kfold_grouped q_source_csv q_source_json
     q_sink_parquet_partitioned q_scan_partition_pruned q_ctas
-    q_source_text q_source_binaryfile q_source_orc
-    q_source_json_corrupt q_source_schema_evolution
-    q_export_jsonl_shards q_export_webdataset q_source_xml q_scan_dpp
-    q_stats_prop_ztest q_feature_target_encode q_feature_impute
-    q_sample_negative_downsample q_shard_rendezvous q_label_churn
-    q_quality_event_order q_budget_waterfill q_stream_watermark_planner
-    q_split_three_way q_sim_ivf_index q_sample_ppl_band q_select_dsir
-    q_order_curriculum q_sample_class_quota q_text_ql
+    q_source_text q_source_binaryfile q_source_orc q_source_json_corrupt
+    q_source_schema_evolution q_export_jsonl_shards q_export_webdataset
+    q_source_xml q_scan_dpp q_stats_prop_ztest q_feature_target_encode
+    q_feature_impute q_sample_negative_downsample q_shard_rendezvous
+    q_label_churn q_quality_event_order q_budget_waterfill
+    q_stream_watermark_planner q_split_three_way q_sim_ivf_index
+    q_sample_ppl_band q_order_curriculum q_sample_class_quota q_text_ql
     q_text_phrase_search q_scan_full q_scan_prune_cols q_scan_pushdown
     q_scan_users q_flagship_pricing_summary q_sample_hash
     q_scan_file_metadata q_project_expr q_filter_conj
     q_filter_in_between_like q_filter_rlike q_filter_null q_case_when
-    q_sink_pyds q_join_bucketed q_contamination q_dedup_minhash
-    q_dedup_containment q_dedup_span q_maintenance_compact
-    q_dedup_simhash q_multimodal_decode_real q_join_inner q_join_left
-    q_join_right q_join_full q_join_semi q_join_anti q_join_broadcast
+    q_sink_pyds q_join_bucketed q_contamination q_maintenance_compact
+    q_multimodal_decode_real q_join_inner q_join_left q_join_right
+    q_join_full q_join_semi q_join_anti q_join_broadcast
     q_join_theta_range q_join_cross q_join_asof q_join_copartitioned
     q_join_multiway q_join_salted q_join_range_binned q_join_pit
+    q_graph_pagerank q_graph_bfs q_graph_cc q_graph_kcore q_graph_sssp
+    q_join_null_safe q_dedup_embedding q_agg_global q_agg_hash
+    q_agg_distinct q_agg_rollup q_agg_cube q_agg_gsets q_agg_having
+    q_agg_stats q_pivot q_unpivot q_agg_hist q_agg_mode
+    q_agg_collect_sorted q_agg_filtered q_basket_lift q_agg_corr_matrix
+    q_agg_regr q_agg_incremental q_agg_mad_outliers
+    q_agg_approx_distinct q_agg_sketch_hll q_fn_date q_dedup_containment
+    q_dedup_ngram_jaccard q_dedup_ngram_prefix q_dedup_incremental_fuzzy
+    q_split_leakage q_dedup_clusters q_dedup_minhash_audit
     q_stream_tumbling q_stream_sliding q_stream_session
     q_stream_multires q_stream_watermark_late q_stream_dedup
     q_stream_stateful q_stream_sink q_stream_foreach_batch
     q_stream_cdc_upsert q_stream_join_static q_stream_join_interval
     q_stream_join_outer q_stream_join_semi q_stream_stateful_tws
-    q_graph_pagerank q_graph_bfs q_graph_cc q_graph_kcore q_graph_sssp
-    q_join_null_safe q_dedup_ngram_jaccard q_dedup_ngram_prefix
-    q_dedup_incremental_fuzzy q_split_leakage q_dedup_clusters
-    q_dedup_minhash_audit q_dedup_embedding q_agg_global q_agg_hash
-    q_agg_distinct q_agg_rollup q_agg_cube q_agg_gsets q_agg_having
-    q_agg_stats q_pivot q_unpivot q_agg_hist q_agg_mode
-    q_agg_collect_sorted q_agg_filtered q_basket_lift q_agg_corr_matrix
-    q_agg_regr q_agg_incremental q_agg_mad_outliers
-    q_agg_approx_distinct q_agg_sketch_hll q_fn_date
+    q_dedup_simhash q_dedup_minhash q_dedup_span q_geo_knn q_select_dsir
+    q_drift_ks q_classify_nb q_agg_heavy_hitters q_text_novelty
+    q_stats_kruskal q_tpch_q17 q_tpch_q20 q_tpch_q21 q_fn_array q_fn_map
+    q_vec_centroid q_vec_quantize q_retention_cohorts q_udf_cogroup
+    q_agg_weighted q_agg_multi_distinct q_agg_listagg q_agg_grouping_id
+    q_agg_higher_moments q_agg_approx_quantile q_win_rank q_win_analytic
+    q_win_frame_rows
     """.split()
 )
 
@@ -291,6 +291,14 @@ _MODIFIED_THIS_ROUND: list[str] = [
     "q_stats_kruskal",
     # r14 reworks that no driver verdict covers yet
     "q_agg_sketch_theta", "q_text_perplexity_bigram",
+    # catalog.read_parquet: fixture reads reuse the inferred footer
+    # schema, and the staged events copies are keyed by source file
+    "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_tpch_q6", "q_ctas",
+    "q_stream_watermark_late",
+    # operators/scans.py: reads lineitem through catalog.load
+    "q_scan_file_metadata",
+    # streaming/stateful.py: the staged-source schema probe
+    "q_stream_cdc_upsert",
 ]
 
 #: One-time rotation priority — RETIRED as of r10 (every oracle-backed

@@ -27,7 +27,8 @@ def stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Copy events.parquet into a streaming-source directory (idempotent).
 
     Cross-process safety (r10, same audit as workdir.py): the staged
-    copy is a shared cache keyed by sf_dir — worth keeping shared
+    copy is a shared cache keyed by the source file's path, mtime and
+    size (`catalog.events_stage_tag`) — worth keeping shared
     (staging sf0.1 events costs a full rewrite) but the old
     overwrite-in-place + empty-marker protocol let two first-stagers
     write the SAME directory concurrently. Now each stager writes a
@@ -37,10 +38,9 @@ def stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     stagers publish last-wins, and nobody deletes a directory another
     process might be reading. Pre-r10 empty markers fail the content
     check and simply restage."""
-    from ..catalog import load
+    from ..catalog import events_stage_tag, load
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(_STAGE_ROOT, tag)
+    base = os.path.join(_STAGE_ROOT, events_stage_tag(sf_dir))
     marker = os.path.join(base, "_staged_multi")
     if os.path.exists(marker):
         with open(marker) as f:
@@ -156,6 +156,7 @@ def _reap_stale_stages(base: str, keep: str) -> None:
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the staged events directory (schema from batch)."""
+    from ..catalog import read_parquet
     from ..memharden import starved_parts
 
     # Streaming state partitioning is fixed at query start from
@@ -167,7 +168,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session narrowing the batch path uses (no-op at normal memory).
     starved_parts(spark)
     src = stage_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     return spark.readStream.schema(schema).parquet(src)
 
 

@@ -473,6 +473,7 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
+    from ..catalog import read_parquet
     from ..workdir import scratch_root
     from .runtime import stage_events_dir
 
@@ -489,7 +490,7 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         cdc_merge_epoch(spark, base_dir, state, batch_df, epoch_id)
 
     src = stage_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
