@@ -198,10 +198,13 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: kmeans_centroids(emb),
     )
 
+    # assign never returns null; the coalesce says so, which drops the
+    # join's inferred isnotnull(cell) filter — pushed below this
+    # projection, that filter ran the kernel a second time
     cells = emb.select(
         F.col("vec_id").alias("cand_id"),
         F.col("v").alias("cv"),
-        _assign_udf(centroids)(F.col("v")).alias("cell"),
+        F.coalesce(_assign_udf(centroids)(F.col("v")), F.lit(-1)).alias("cell"),
     )
     probe_cells = _probes(emb).select(
         F.col("vec_id").alias("query_id"),

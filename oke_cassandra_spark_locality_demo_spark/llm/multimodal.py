@@ -422,7 +422,7 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal counterpart of the text dedup ladder (LAION-style
     image dedup by aHash/pHash): mapInPandas computes each image's
     64-bit average-hash as four 16-bit bands, and the EXACT d ≤ 3
-    near-dup tier comes from a banded self-join — by pigeonhole, any
+    near-dup tier comes from band buckets — by pigeonhole, any
     pair within Hamming distance 3 of a 4-band split agrees on ≥ 1
     whole band, so unlike `q_dedup_simhash`'s best-effort d ≤ 6 tier
     this output is complete (recall 1.0) and fully oracle-checkable.
@@ -431,65 +431,50 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: hashing is one Arrow-batched pass over the media
     table (the decode seam — a real pipeline drops a grayscale 8×8
-    mean filter into `phash_bands`); candidates come from a 4×
-    (band_idx, band_val)-keyed equi-join — bucketed, never all-pairs —
-    then distinct + exact Hamming verify on the 4-int fingerprints;
-    the degree rollup and the left join back are doc-keyed hash
-    operations. The oracle recomputes the identical integer pipeline
-    from the hex-rendered payload bytes (multibyte-safe, the
+    mean filter into `phash_bands`), and the kernel's output feeds one
+    linear pipeline, so the plan holds it once. Each fingerprint
+    explodes into its 4 (band_idx, band_val) buckets; one bucket-keyed
+    aggregation collects the members' fingerprints — bucketed, never
+    all-pairs, with work quadratic only within a bucket, as a banded
+    equi-join would be — and each member keeps the in-bucket partners
+    within exact Hamming distance 3. A doc sits in all of its own 4
+    buckets, so one doc-keyed aggregation sees every partner it has:
+    its degree is the distinct count of the flattened partner lists (a
+    pair sharing several bands counts once), and no join back to the
+    fingerprints is needed. Three exchanges: bucket, doc, final sort.
+    The oracle recomputes the identical integer pipeline from the
+    hex-rendered payload bytes (multibyte-safe, the
     q_multimodal_resize convention)."""
     media = media_table(spark, sf_dir).filter(F.col("media_type") == "image/png")
     w = media.mapInPandas(phash_bands, schema=PHASH_SCHEMA).filter(
         F.col("b0").isNotNull()
     )
-    long = w.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"), F.col(f"b{b}").alias("val")
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bv"),
-    ).select("doc_id", "bv.band_idx", "bv.val")
-    cand = (
-        long.alias("x")
-        .join(long.alias("y"), ["band_idx", "val"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
+    fp = ["doc_id", "b0", "b1", "b2", "b3"]
+    buckets = (
+        w.select(
+            F.struct(*fp).alias("me"),
+            F.posexplode(F.array(*fp[1:])).alias("band_idx", "val"),
         )
-        .distinct()
+        .groupBy("band_idx", "val")
+        .agg(F.collect_list("me").alias("members"))
     )
-    fa = w.select(F.col("doc_id").alias("doc_a"), *[F.col(f"b{b}").alias(f"a{b}") for b in range(4)])
-    fb = w.select(F.col("doc_id").alias("doc_b"), *[F.col(f"b{b}").alias(f"c{b}") for b in range(4)])
-    hamming = sum(
-        F.bit_count(F.col(f"a{b}").bitwiseXOR(F.col(f"c{b}"))) for b in range(4)
-    )
-    pairs = (
-        cand.join(fa, "doc_a")
-        .join(fb, "doc_b")
-        .filter(hamming <= 3)
-        .select("doc_a", "doc_b")
-    )
-    deg = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(pairs.select(F.col("doc_b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_near"))
+
+    def near(m):
+        """m is a bucket member within d ≤ 3 of this row's doc `me`."""
+        me = F.col("me")
+        hamming = sum(F.bit_count(m[b].bitwiseXOR(me[b])) for b in fp[1:])
+        return (m["doc_id"] != me["doc_id"]) & (hamming <= 3)
+
+    partners = buckets.select(F.explode("members").alias("me"), "members").select(
+        "me",
+        F.transform(F.filter("members", near), lambda m: m["doc_id"]).alias("partners"),
     )
     return (
-        w.join(deg, "doc_id", "left")
-        .select(
-            "doc_id",
-            "b0",
-            "b1",
-            "b2",
-            "b3",
-            F.coalesce(F.col("n_near"), F.lit(0)).cast("long").alias("n_near"),
+        partners.groupBy(*[F.col(f"me.{c}").alias(c) for c in fp])
+        .agg(
+            F.size(F.array_distinct(F.flatten(F.collect_list("partners"))))
+            .cast("long")
+            .alias("n_near")
         )
         .orderBy("doc_id")
     )

@@ -57,11 +57,11 @@ STARVED_PARTS = 2
 
 def exec_memory_starved(spark: SparkSession) -> bool:
     """True when the session runs under deliberate execution-memory
-    starvation (see module docstring for the page arithmetic)."""
+    starvation (see module docstring for the page arithmetic). Reads
+    the one key: ``sparkContext.getConf()`` would copy the whole
+    SparkConf over Py4J on every barrier."""
     try:
-        frac = float(
-            spark.sparkContext.getConf().get("spark.memory.fraction", "0.6")
-        )
+        frac = float(spark.conf.get("spark.memory.fraction", "0.6"))
     except (TypeError, ValueError):
         return False
     return frac <= STARVED_FRACTION_MAX

@@ -299,6 +299,8 @@ _MODIFIED_THIS_ROUND: list[str] = [
     "q_scan_file_metadata",
     # streaming/stateful.py: the staged-source schema probe
     "q_stream_cdc_upsert",
+    # llm/multimodal.py: one phash_bands pass, band buckets, no self-join
+    "q_multimodal_phash",
 ]
 
 #: One-time rotation priority — RETIRED as of r10 (every oracle-backed

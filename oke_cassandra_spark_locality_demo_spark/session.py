@@ -6,6 +6,15 @@ log level). Here the connector confs are replaced by engine confs: AQE for
 runtime re-planning (the stand-in for the connector's adaptive split
 sizing), UTC session timezone for oracle parity, Arrow for the
 Pandas-UDF slow path.
+
+``spark.python.sql.dataFrameDebugging.enabled`` is off. When on,
+PySpark wraps every ``functions.*`` and ``Column`` call to record its
+Python call site in the JVM (about five Py4J round trips per call:
+active-session lookup, a conf read, an origin set and clear), only to
+name that line in engine error messages. A builder makes hundreds of
+such calls, so the capture was about half of its build time. Pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to get the call-site context back while debugging.
 """
 
 from __future__ import annotations
@@ -61,6 +70,7 @@ def build_session(
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
     )
     for k, v in (extra_conf or {}).items():

@@ -540,18 +540,92 @@ def test_bpe_training_partition_invariant(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_phash_banded_degree_equals_all_pairs(spark, sf_dir):
+def _planted_phash_fixture(tmp_path):
+    """A documents.parquet whose image docs (doc_id % 3 == 0) carry
+    64-byte texts: byte i is sampled pixel i, "z" for a set bit and "a"
+    for a clear one, so the average hash is exactly the planted 64-bit
+    pattern (1..63 bits set). Returns (sf_dir, {doc_id: bands}).
+
+    Planted groups, drawn apart at random (the test pins each planted
+    doc's degree, so a chance near pair between groups would show): an
+    exact duplicate; a d = 3 pair sharing exactly one band; a d = 2
+    pair sharing two bands (counted once); a d = 5 pair sharing one
+    band (must not count); a three-doc clique; 20 random singletons;
+    one empty payload (no fingerprint, no output row)."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(2026)
+
+    def rand_bands():
+        while True:
+            bands = tuple(rng.getrandbits(16) for _ in range(4))
+            if 16 <= sum(bin(b).count("1") for b in bands) <= 48:
+                return bands
+
+    def flip(bands, *bits):
+        out = list(bands)
+        for bit in bits:
+            out[bit // 16] ^= 1 << (bit % 16)
+        return tuple(out)
+
+    fps = []
+    a = rand_bands()
+    fps += [a, a]  # exact duplicate: shares all 4 bands
+    b = rand_bands()
+    fps += [b, flip(b, 16, 32, 48)]  # d = 3, shares band 0 only
+    c = rand_bands()
+    fps += [c, flip(c, 32, 48)]  # d = 2, shares bands 0 and 1
+    d = rand_bands()
+    fps += [d, flip(d, 16, 17, 32, 33, 48)]  # d = 5, shares band 0
+    e = rand_bands()
+    fps += [e, flip(e, 0), flip(e, 16)]  # clique: d = 1, 1, 2
+    fps += [rand_bands() for _ in range(20)]
+
+    def text(bands):
+        return "".join(
+            "z" if bands[i // 16] >> (i % 16) & 1 else "a" for i in range(64)
+        )
+
+    ids = [3 * i for i in range(len(fps) + 1)]
+    texts = [text(f) for f in fps] + [""]
+    sf_dir = str(tmp_path / "phash")
+    os.makedirs(sf_dir, exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "doc_id": ids,
+            "text": texts,
+            "lang": ["en"] * len(ids),
+            "source": ["src0"] * len(ids),
+            "n_chars": [len(t) for t in texts],
+        }),
+        os.path.join(sf_dir, "documents.parquet"),
+    )
+    return sf_dir, dict(zip(ids, fps))
+
+
+def test_phash_banded_degree_equals_all_pairs(spark, tmp_path):
     """The pigeonhole completeness claim behind q_multimodal_phash: the
-    banded candidate join must find EVERY pair within Hamming distance 3
-    (4 bands × 16 bits ⇒ any d ≤ 3 pair shares a whole band). Verified
-    independently of the DuckDB oracle by brute-forcing all fingerprint
-    pairs driver-side and comparing per-doc degrees."""
+    banded candidates must find EVERY pair within Hamming distance 3
+    (4 bands × 16 bits ⇒ any d ≤ 3 pair shares a whole band), count a
+    pair that shares several bands once, and drop a band-sharing pair
+    beyond d = 3. Verified on planted fingerprints (the sf0.01 fixture
+    has no near pair at all) by brute-forcing all pairs driver-side,
+    and the whole output against the DuckDB oracle."""
     from itertools import combinations
 
-    from oke_cassandra_spark_locality_demo_spark.registry import get
+    import duckdb
 
-    rows = get("q_multimodal_phash").fn(spark, sf_dir).collect()
+    from .parity import compare
+
+    sf_dir, planted = _planted_phash_fixture(tmp_path)
+    spec = get("q_multimodal_phash")
+    df = spec.fn(spark, sf_dir)
+    rows = df.collect()
     fps = {r.doc_id: (r.b0, r.b1, r.b2, r.b3) for r in rows}
+    assert fps == planted, "kernel fingerprints differ from the planted bands"
     deg = {doc_id: 0 for doc_id in fps}
     for a, b in combinations(sorted(fps), 2):
         d = sum(bin(x ^ y).count("1") for x, y in zip(fps[a], fps[b]))
@@ -560,6 +634,18 @@ def test_phash_banded_degree_equals_all_pairs(spark, sf_dir):
             deg[b] += 1
     got = {r.doc_id: r.n_near for r in rows}
     assert got == deg
+    assert sum(n > 0 for n in got.values()) >= 5, got
+    assert [got[i] for i in (0, 3, 6, 9, 12, 15, 18, 21, 24, 27, 30)] == [
+        1, 1, 1, 1, 1, 1, 0, 0, 2, 2, 2,
+    ]
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM read_parquet("
+        f"'{os.path.join(sf_dir, 'documents.parquet')}')"
+    )
+    ok, msg = compare(df, con, spec.oracle)
+    assert ok, msg
 
 
 def test_rrf_matches_python_reference(spark, sf_dir):

@@ -6,6 +6,7 @@ deterministic."""
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timedelta
 
 from hypothesis import HealthCheck, given, settings
@@ -528,9 +529,40 @@ def test_every_arrow_call_site_reaches_a_swept_key():
     assert keys and set(keys) <= known, set(keys) - known
 
 
+_PLAN_OP = re.compile(r"^[\s:|+\-]*(?:\*\(\d+\)\s*)?(\w+)")
+_PLAN_CALL = re.compile(r"(\w+)\(")
+
+
+def _python_kernels(plan: str) -> list[str]:
+    """The Python kernel names a physical plan string evaluates, one per
+    evaluation: on each Python operator line (MapInPandas,
+    ArrowEvalPython, FlatMapGroupsInPandas, ...), every top-level call
+    rendered as ``name(args)#id`` — the form of a Python UDF."""
+    out = []
+    for line in plan.splitlines():
+        op = _PLAN_OP.match(line)
+        if not op or not re.search("Python|Pandas|Arrow", op.group(1)):
+            continue
+        rest, i = line[op.end():], 0
+        while call := _PLAN_CALL.search(rest, i):
+            depth, j = 1, call.end()
+            while j < len(rest) and depth:
+                depth += {"(": 1, ")": -1}.get(rest[j], 0)
+                j += 1
+            if rest[j:j + 1] == "#":
+                out.append(call.group(1))
+                i = j
+            else:
+                i = call.end()
+    return out
+
+
 def test_arrow_batch_size_invariance(spark, sf_dir):
     """Every Arrow-batched key must produce identical canonical rows
     under the default 10000-row Arrow batches and under 7-row batches.
+    Each key's initial physical plan must also evaluate each Python
+    kernel at most once: a kernel whose output feeds several branches
+    (a self-join, a join back) is planned — and run — once per branch.
 
     On local[32] a 500-row fixture fits in ONE Arrow batch, so
     per-batch logic that should have been merged globally (a partial
@@ -541,7 +573,10 @@ def test_arrow_batch_size_invariance(spark, sf_dir):
     code locally. The registry wrapper pins only session.timeZone, so
     this conf is a live environment axis, same as the shuffle-layout
     sweep above."""
+    from collections import Counter
+
     from oke_cassandra_spark_locality_demo_spark import registry
+    from oke_cassandra_spark_locality_demo_spark.plans.inspect import simple_plan
 
     from .parity import _canon
 
@@ -553,11 +588,14 @@ def test_arrow_batch_size_invariance(spark, sf_dir):
         for batch in ("10000", "7"):
             spark.conf.set(conf, batch)
             for name in keys:
+                df = registry.get(name).fn(spark, sf_dir)
+                if batch == "10000":
+                    # before collect(): AQE replaces the initial plan
+                    kernels = Counter(_python_kernels(simple_plan(df)))
+                    rerun = {k: n for k, n in kernels.items() if n > 1}
+                    assert not rerun, f"{name} plans a Python kernel more than once: {rerun}"
                 rows = sorted(
-                    (
-                        tuple(_canon(v) for v in r)
-                        for r in registry.get(name).fn(spark, sf_dir).collect()
-                    ),
+                    (tuple(_canon(v) for v in r) for r in df.collect()),
                     key=_row_key,
                 )
                 # a builder that writes the batch size into the shared
