@@ -22,6 +22,7 @@ from __future__ import annotations
 import hashlib
 import os
 import stat
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -151,15 +152,15 @@ def users_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(USERS_ROWS, USERS_SCHEMA)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table (plus `users`) as a temp view so both
-    the DataFrame API and ``spark.sql`` address the same catalog."""
+def register_views(
+    spark: SparkSession, sf_dir: str, names: Iterable[str] = (*TABLES, "users")
+) -> dict[str, DataFrame]:
+    """Register fixture tables (default: every one, plus `users`) as temp
+    views so both the DataFrame API and ``spark.sql`` address the same
+    catalog."""
     out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load(spark, sf_dir, name)
+    for name in names:
+        df = users_df(spark) if name == "users" else load(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
-    u = users_df(spark)
-    u.createOrReplaceTempView("users")
-    out["users"] = u
     return out

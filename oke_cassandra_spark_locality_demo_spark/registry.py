@@ -301,6 +301,11 @@ _MODIFIED_THIS_ROUND: list[str] = [
     "q_stream_cdc_upsert",
     # llm/multimodal.py: one phash_bands pass, band buckets, no self-join
     "q_multimodal_phash",
+    # streaming/runtime.py: replays start on the FileSystem checkpoint
+    # manager with one wave of state partitions and drop their sink
+    # view (q_stream_watermark_late is listed above); q_ctas registers
+    # only the two views it reads (listed above)
+    "q_stream_stateful", "q_stream_stateful_tws", "q_stream_pyds",
 ]
 
 #: One-time rotation priority — RETIRED as of r10 (every oracle-backed

@@ -182,7 +182,7 @@ def q_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("supplier", "nation"))
     spark.sql("DROP TABLE IF EXISTS supplier_by_nation")
     # the in-memory catalog forgets tables across sessions but the
     # warehouse directory persists — clear any stale location too

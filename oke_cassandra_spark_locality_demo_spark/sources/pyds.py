@@ -178,19 +178,12 @@ def q_stream_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from one store). Offsets are checkpointable dicts and
     readBetweenOffsets replays ranges, so the source slots into
     Structured Streaming's exactly-once machinery unchanged."""
+    from ..streaming.runtime import replay_to_memory
+
     _ensure_registered(spark)
-    name = "graft_pyds_sink"
-    q = (
-        spark.readStream.format("users_tokenring")
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return replay_to_memory(
+        spark, spark.readStream.format("users_tokenring").load(), "append"
     )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 class _TokenRouteCommit(WriterCommitMessage):

@@ -2,9 +2,27 @@
 
 The fixture `events.parquet` is a single file; Structured Streaming file
 sources want a directory they can list incrementally, so we stage a copy
-(one-time per sf_dir) into a temp dir. `run_streaming_query` then runs
-any events→DataFrame transformation as a real incremental query into a
+into a temp dir, shared by every process and keyed by the source file's
+path, mtime and size. `run_streaming_query` then runs any
+events→DataFrame transformation as a real incremental query into a
 memory sink and returns the collected result table.
+
+A replay's checkpoint is Spark's temporary one: one writer, deleted
+when the query ends. `replay_to_memory` starts it under two settings
+that `start()` copies into the stream's own session and that are
+restored on the caller's session right after:
+
+- the FileSystem-based checkpoint file manager. Without libhadoop
+  (Spark's bundled Hadoop client ships none), the default FileContext
+  manager forks `chmod` for every file it creates and `readlink` for
+  every rename; `FileSystem.rename` on a local path is one atomic
+  `rename(2)`. Explicit checkpoints that must survive a restart
+  (`q_stream_sink`, `q_stream_cdc_upsert`, ...) keep the default.
+- one wave of state partitions, `min(spark.sql.shuffle.partitions,
+  defaultParallelism)`. A stateful operator's partition count is fixed
+  for its checkpoint's lifetime and AQE never coalesces it, so every
+  partition beyond one wave of cores only adds a state store to load,
+  delta, checksum and commit.
 
 At production scale the same code points `readStream` at the ingest
 directory/Kafka topic; `availableNow` is the batch-backfill trigger
@@ -16,8 +34,11 @@ from __future__ import annotations
 
 import os
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Mapping
+from contextlib import contextmanager
+from functools import lru_cache, reduce
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 _STAGE_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_stream")
@@ -175,6 +196,71 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SINK_SEQ = [0]
 
 
+@lru_cache(maxsize=1)
+def _fs_checkpoint_manager(jvm) -> str:
+    """The FileSystem-based checkpoint file manager's class name in the
+    running JVM: it moved package in Spark 4.1, and pyproject allows
+    pyspark 3.5. Memoized per JVM."""
+    for pkg in ("checkpointing.", ""):
+        name = ("org.apache.spark.sql.execution.streaming."
+                f"{pkg}FileSystemBasedCheckpointFileManager")
+        if isinstance(reduce(getattr, name.split("."), jvm), JavaClass):
+            return name
+    raise RuntimeError("no FileSystemBasedCheckpointFileManager in the JVM")
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: Mapping[str, str]) -> Iterator[None]:
+    """Set ``settings`` on the session for the body, then restore each
+    key's previous value (unset where it had none), also on error."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _replay_conf(spark: SparkSession) -> dict[str, str]:
+    """The settings a replay on a temporary checkpoint starts under (the
+    module docstring has why)."""
+    sc = spark.sparkContext
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return {
+        "spark.sql.streaming.checkpointFileManagerClass": _fs_checkpoint_manager(sc._jvm),
+        "spark.sql.shuffle.partitions": str(min(parts, sc.defaultParallelism)),
+    }
+
+
+def replay_to_memory(
+    spark: SparkSession, stream: DataFrame, output_mode: str
+) -> DataFrame:
+    """Run ``stream`` to completion with availableNow into a memory sink
+    on a temporary checkpoint; return the sink contents. The sink's temp
+    view is dropped again: the returned DataFrame holds the sink itself,
+    so the session keeps no view, and no rows, once it is gone."""
+    _SINK_SEQ[0] += 1
+    name = f"graft_sink_{_SINK_SEQ[0]}"
+    writer = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    with scoped_conf(spark, _replay_conf(spark)):
+        q = writer.start()
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
 def run_streaming_query(
     spark: SparkSession,
     sf_dir: str,
@@ -183,22 +269,14 @@ def run_streaming_query(
 ) -> DataFrame:
     """Run `transform(events_stream)` to completion with availableNow into
     a memory sink; return the sink contents as a DataFrame."""
-    _SINK_SEQ[0] += 1
-    name = f"graft_sink_{_SINK_SEQ[0]}"
-    q = (
-        transform(events_stream(spark, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     from ..memharden import stage_barrier
 
+    result = replay_to_memory(
+        spark, transform(events_stream(spark, sf_dir)), output_mode
+    )
     # memharden barrier on the sink read (identity at normal memory):
     # memory-sink tables scan at the master's full width, and a
     # 32-wide post-sink partial aggregate fail-stops at the
     # local[32] + fraction=0.05 extreme — every streaming key's batch
     # post-processing starts narrow from here instead
-    return stage_barrier(spark.table(name))
+    return stage_barrier(result)

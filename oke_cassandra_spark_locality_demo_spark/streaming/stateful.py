@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load
 from ..registry import EVENTS_US, register
-from .runtime import events_stream, run_streaming_query
+from .runtime import events_stream, run_streaming_query, scoped_conf
 
 
 @register(
@@ -226,45 +226,35 @@ def q_stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     use_tws = _tws_available()
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if use_tws:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-    try:
 
-        def xf(stream: DataFrame) -> DataFrame:
-            grouped = stream.groupBy("user_id")
-            if use_tws:
-                return grouped.transformWithStateInPandas(
-                    statefulProcessor=_make_user_agg_processor(),
-                    outputStructType=_TWS_OUT_SCHEMA,
-                    outputMode="Update",
-                    timeMode="None",
-                )
-            return grouped.applyInPandasWithState(
-                _count_max_per_user,
+    def xf(stream: DataFrame) -> DataFrame:
+        grouped = stream.groupBy("user_id")
+        if use_tws:
+            return grouped.transformWithStateInPandas(
+                statefulProcessor=_make_user_agg_processor(),
                 outputStructType=_TWS_OUT_SCHEMA,
-                stateStructType="seen BIGINT, vmax DOUBLE",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
+                outputMode="Update",
+                timeMode="None",
             )
+        return grouped.applyInPandasWithState(
+            _count_max_per_user,
+            outputStructType=_TWS_OUT_SCHEMA,
+            stateStructType="seen BIGINT, vmax DOUBLE",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
+    provider = {
+        "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    } if use_tws else {}
+    with scoped_conf(spark, provider):
         # run_streaming_query barriers the sink read under starvation
         result = run_streaming_query(spark, sf_dir, xf, output_mode="update")
-        return result.groupBy("user_id").agg(
-            F.max("events_seen").alias("events_seen"),
-            F.max("max_value").alias("max_value"),
-        )
-    finally:
-        if use_tws:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
+    return result.groupBy("user_id").agg(
+        F.max("events_seen").alias("events_seen"),
+        F.max("max_value").alias("max_value"),
+    )
 
 
 @register(

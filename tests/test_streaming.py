@@ -7,11 +7,15 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from oke_cassandra_spark_locality_demo_spark.catalog import load
 from oke_cassandra_spark_locality_demo_spark.registry import get
-from oke_cassandra_spark_locality_demo_spark.streaming.runtime import run_streaming_query
+from oke_cassandra_spark_locality_demo_spark.streaming.runtime import (
+    run_streaming_query,
+    scoped_conf,
+)
 from oke_cassandra_spark_locality_demo_spark.streaming.windows import STREAMING_FORMS
 
 
@@ -484,3 +488,96 @@ def test_cdc_merge_recovers_from_disk_and_ignores_torn_snapshot(spark):
         import shutil
 
         shutil.rmtree(base, ignore_errors=True)
+
+
+_REPLAY_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
+
+
+def _sink_views(spark):
+    return [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("graft_sink_")
+    ]
+
+
+def test_replays_leave_no_sink_view(spark, sf_dir):
+    """Each replay drops its memory sink's temp view: the returned
+    DataFrame keeps the sink's rows, the session keeps neither."""
+    counts = [
+        run_streaming_query(
+            spark, sf_dir, lambda s: s.groupBy("user_id").count(), "complete"
+        ).count()
+        for _ in range(3)
+    ]
+    pyds = get("q_stream_pyds").fn(spark, sf_dir).count()
+    assert _sink_views(spark) == []
+    n_users = load(spark, sf_dir, "events").select("user_id").distinct().count()
+    assert counts == [n_users] * 3
+    assert pyds == 3
+
+
+def test_replay_restores_session_conf(spark, sf_dir):
+    """The replay's start-time settings are scoped to ``start()``: the
+    caller's session reads exactly as before, also when ``start()``
+    raises (append mode over an aggregation without a watermark fails
+    analysis there)."""
+    from pyspark.errors import AnalysisException
+
+    def read():
+        return {k: spark.conf.get(k, None) for k in _REPLAY_CONFS}
+
+    before = read()
+    run_streaming_query(spark, sf_dir, lambda s: s.groupBy("user_id").count())
+    assert read() == before
+    fc = ("org.apache.spark.sql.execution.streaming.checkpointing."
+          "FileContextBasedCheckpointFileManager")
+    with scoped_conf(spark, {_REPLAY_CONFS[1]: fc}):
+        with pytest.raises(AnalysisException):
+            run_streaming_query(
+                spark, sf_dir, lambda s: s.groupBy("user_id").count(), "append"
+            )
+        assert read() == {**before, _REPLAY_CONFS[1]: fc}
+    assert read() == before
+    assert _sink_views(spark) == []
+
+
+def test_replay_takes_one_wave_of_state_partitions(spark, sf_dir):
+    """A replay's state operator gets min(shuffle partitions,
+    defaultParallelism) partitions: on a temporary checkpoint every
+    partition past one wave of cores only adds a state store."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Parts(StreamingQueryListener):
+        def __init__(self):
+            self.seen = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.seen += [
+                s.numShufflePartitions for s in event.progress.stateOperators
+            ]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    wave = spark.sparkContext.defaultParallelism
+    listener = Parts()
+    spark.streams.addListener(listener)
+    try:
+        # twice the cores: the session's own width must not reach the state
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(2 * wave)}):
+            run_streaming_query(
+                spark, sf_dir, lambda s: s.groupBy("user_id").count()
+            )
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.seen and set(listener.seen) == {wave}, listener.seen
