@@ -18,6 +18,7 @@ import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -65,6 +66,12 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     worker's sys.path on every node, which is also exactly what a real
     1000-executor cluster needs (the repo is not installed on worker
     images there either).
+
+    The driver-side worker that plans a *streaming* Python data source
+    resolves its includes under ``<SparkFiles root>/streaming_job`` (a
+    fixed job-artifact id in Spark's ``PythonStreamingSourceRunner``),
+    not under the root where ``addPyFile`` put the zip, so the zip is
+    linked there too.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId
@@ -78,6 +85,13 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     if not os.path.exists(zip_base + ".zip"):
         shutil.make_archive(zip_base, "zip", root_dir=parent, base_dir=pkg_name)
     sc.addPyFile(zip_base + ".zip")
+    root = SparkFiles.getRootDirectory()
+    zip_name = os.path.basename(zip_base) + ".zip"
+    streaming_root = os.path.join(root, "streaming_job")
+    os.makedirs(streaming_root, exist_ok=True)
+    link = os.path.join(streaming_root, zip_name)
+    if not os.path.lexists(link):
+        os.symlink(os.path.join(root, zip_name), link)
     _PYFILES_SHIPPED.add(app_id)
 
 
@@ -129,249 +143,20 @@ def _load_all() -> None:
     from .llm import dedup, similarity, text, multimodal, pipeline, ivf, pq, sampling, bpe, rank  # noqa: F401
 
 
-#: Keys already adjudicated by the driver's correctness harness (it
-#: samples the FIRST 50 keys of queries() each round; rounds 1-2 sampled
-#: the natural registration prefix — CORRECTNESS_r01/r02; round 3's
-#: sample is appended below per CORRECTNESS_r03). Listing them here
-#: pushes them to the back of the iteration order so every round fronts
-#: keys that have never received a driver verdict. Ordering is
-#: presentation-only — every key stays registered, locally
-#: mirror-verified, and callable by name.
-#:
-#: Honesty guard (ADVICE r3, high): back-listing must never hide a
-#: regression from the driver, so any key whose implementation OR
-#: oracle changed in the current round goes in _MODIFIED_THIS_ROUND,
-#: which _sample_order always fronts AHEAD of this back-list — a
-#: changed query is always re-adjudicated externally, adjudication
-#: history notwithstanding. Append each round's newly sampled keys
-#: here after the round's CORRECTNESS lands, and reset
-#: _MODIFIED_THIS_ROUND to the keys actually touched in the new round.
-#: Ordered by EXTERNAL-GRADE RECENCY, stalest first: when a round's
-#: CORRECTNESS lands, that round's graded keys are appended at the
-#: TAIL (moved there if already listed — a re-grade refreshes the
-#: key's position, it does not duplicate it). _sample_order fills
-#: spare prefix slots from the FRONT of this list, so the driver's
-#: free capacity is always a rolling re-adjudication of the stalest
-#: external verdicts. As of r10 the one-time rotation is complete
-#: (every key graded at least once) and this list holds all 401 keys
-#: (each round's graded keys moved to the tail in its CORRECTNESS
-#: order, per the standing playbook): r1-r9 grades first (minus keys
-#: re-graded later), then the r10/r11/r12 blocks, then the r13 block,
-#: which r14 graded again in the same order, at the tail.
-_DRIVER_ADJUDICATED_ORDERED = (
-    """
-    q_win_frame_range q_funnel_conversion q_topk_per_group
-    q_win_distribution q_cdc_apply q_scd2_dimension q_win_streaks
-    q_win_time_weighted q_gapfill_locf q_win_attribution
-    q_win_transitions q_sort_multi q_limit q_topk q_sort_zorder q_union
-    q_union_distinct q_intersect q_except q_snapshot_diff q_meta_tables
-    q_quality_audit q_profile_columns q_subqueries q_recursive_cte
-    q_join_lateral q_sql_pipe q_sql_params q_sim_knn_blas
-    q_sample_weighted q_mix_sources q_split_train_test
-    q_split_drift_chisq q_feature_rare_collapse q_text_stats
-    q_text_redact q_text_repetition q_fn_string q_fn_math q_fn_json
-    q_fn_cast_decimal q_dedup_exact q_dedup_entity q_dedup_incremental
-    q_sim_knn_exact q_sim_pairwise_label q_sim_lsh_audit q_sim_ivf_audit
-    q_text_quality q_text_langid q_text_tokens q_text_fingerprint
-    q_text_chunk q_text_tfidf q_text_clean q_text_url_extract q_text_pmi
-    q_text_entropy q_text_perplexity q_multimodal_cols
-    q_multimodal_binary q_multimodal_frames q_pipeline_e2e q_udf_python
-    q_multimodal_resize q_sim_ivf q_sim_pq q_sim_pq_audit q_vec_pca
-    q_pack_sequences q_stream_pyds q_udf_pandas q_udf_grouped_agg
-    q_udf_arrow q_udtf q_udtf_python q_source_pyds_scan
-    q_source_pyds_lookup q_insert_upsert q_meta_engine_info q_tpch_q1
-    q_tpch_q3 q_tpch_q5 q_tpch_q6 q_tpch_q9 q_tpch_q18
-    q_privacy_dp_count q_tpch_q2 q_tpch_q4 q_tpch_q7 q_tpch_q8
-    q_tpch_q10 q_tpch_q11 q_tpch_q12 q_tpch_q13 q_tpch_q14 q_tpch_q15
-    q_tpch_q16 q_tpch_q19 q_tpch_q22 q_agg_sketch_cms q_agg_sketch_theta
-    q_agg_sketch_moments q_agg_bitmap_distinct q_agg_bitmap_overlap
-    q_mv_incremental q_merge_multi_action q_sessionize q_join_bloom
-    q_text_bm25 q_text_zipf q_shuffle_epoch q_win_ewma
-    q_sample_temperature q_sample_stratified q_sql_scripting
-    q_ordinal_assign q_feature_bucketize q_fn_bitwise q_fn_collation
-    q_fn_explode q_fn_generators q_fn_sequence q_fn_struct q_fn_try
-    q_sim_lsh q_text_compress_ratio q_fn_variant q_fn_xml
-    q_fn_editdistance q_fn_codec q_fn_stable_id q_fn_time_bucket
-    q_fn_split_part q_graph_triangles q_graph_common_neighbors
-    q_graph_assortativity q_graph_modularity q_graph_2hop_reach
-    q_graph_degree_powerlaw q_graph_neighbor_sample q_geo_radius_join
-    q_geo_grid_density q_stats_anova_f q_stats_cohen_kappa
-    q_stats_kaplan_meier q_stats_levene q_stats_spearman
-    q_ts_backtest_snaive q_stats_gtest q_stats_mcnemar
-    q_stats_overdispersion q_stats_wilcoxon q_ts_changepoint q_stats_ess
-    q_privacy_kanon q_privacy_ldiversity q_privacy_tclose
-    q_privacy_suppress q_privacy_uniqueness q_text_bpe_train
-    q_text_bpe_encode q_text_bpe_fertility q_rank_rrf q_rank_eval
-    q_rank_tau q_rank_ndcg q_join_asof_tolerance q_join_asof_nearest
-    q_join_size_estimate q_rank_wilson q_agg_percentile_exact
-    q_join_cardinality_sketch q_win_sketch_distinct q_agg_abc_pareto
-    q_agg_weighted_median q_agg_heavy_changers q_agg_benford
-    q_agg_lorenz_gini q_agg_hhi q_agg_log_histogram q_agg_argmax
-    q_agg_decay_sum q_agg_winsorized_mean q_agg_ohlc q_agg_simpson
-    q_agg_hist_equidepth q_agg_vwap q_agg_rfm q_agg_percent_of_parent
-    q_agg_mix_shift q_agg_linreg2 q_agg_purchase_gaps
-    q_agg_growth_accounting q_agg_abc_xyz q_agg_cr4 q_agg_theil
-    q_agg_arpu q_win_rolling_median q_pareto_frontier q_ts_downsample_m4
-    q_drift_cusum q_ts_autocorr q_ts_seasonal_dow q_win_rolling_slope
-    q_ts_outlier_rolling q_agg_cohort_ltv q_funnel_multistep
-    q_win_time_to_convert q_win_drawdown q_ts_interpolate_linear
-    q_ts_resample_weekly q_win_path_topk q_win_distinct_bitmask
-    q_win_concurrency_sweep q_ts_new_users q_win_rsi q_ts_wau
-    q_fraud_double_charge q_win_rolling_corr q_ts_dau_mau
-    q_intersect_all q_except_all q_profile_skew q_fn_sql_udf
-    q_sql_group_by_all q_sql_qualify q_sql_window_clause
-    q_sql_distinct_on q_export_manifest q_dedup_priority q_dedup_url
-    q_vec_jl_projection q_text_boilerplate q_text_perplexity_bigram
-    q_quality_gopher q_text_rake q_text_dechunk q_text_langid_eval
-    q_text_autocomplete q_text_hapax q_text_burstiness
-    q_text_readability q_text_script_mix q_text_vocab_overlap
-    q_multimodal_phash q_multimodal_audio_energy
-    q_multimodal_dedup_bytes q_multimodal_scenecut
-    q_multimodal_payload_entropy q_corpus_card q_stats_mannwhitney
-    q_agg_gini q_stats_welch_ttest q_stats_permutation
-    q_stats_bootstrap_ci q_drift_jsd q_stats_runs_test
-    q_split_kfold_grouped q_source_csv q_source_json
-    q_sink_parquet_partitioned q_scan_partition_pruned q_ctas
-    q_source_text q_source_binaryfile q_source_orc q_source_json_corrupt
-    q_source_schema_evolution q_export_jsonl_shards q_export_webdataset
-    q_source_xml q_scan_dpp q_stats_prop_ztest q_feature_target_encode
-    q_feature_impute q_sample_negative_downsample q_shard_rendezvous
-    q_label_churn q_quality_event_order q_budget_waterfill
-    q_stream_watermark_planner q_split_three_way q_sim_ivf_index
-    q_sample_ppl_band q_order_curriculum q_sample_class_quota q_text_ql
-    q_text_phrase_search q_scan_full q_scan_prune_cols q_scan_pushdown
-    q_scan_users q_flagship_pricing_summary q_sample_hash
-    q_scan_file_metadata q_project_expr q_filter_conj
-    q_filter_in_between_like q_filter_rlike q_filter_null q_case_when
-    q_sink_pyds q_join_bucketed q_contamination q_maintenance_compact
-    q_multimodal_decode_real q_join_inner q_join_left q_join_right
-    q_join_full q_join_semi q_join_anti q_join_broadcast
-    q_join_theta_range q_join_cross q_join_asof q_join_copartitioned
-    q_join_multiway q_join_salted q_join_range_binned q_join_pit
-    q_graph_pagerank q_graph_bfs q_graph_cc q_graph_kcore q_graph_sssp
-    q_join_null_safe q_dedup_embedding q_agg_global q_agg_hash
-    q_agg_distinct q_agg_rollup q_agg_cube q_agg_gsets q_agg_having
-    q_agg_stats q_pivot q_unpivot q_agg_hist q_agg_mode
-    q_agg_collect_sorted q_agg_filtered q_basket_lift q_agg_corr_matrix
-    q_agg_regr q_agg_incremental q_agg_mad_outliers
-    q_agg_approx_distinct q_agg_sketch_hll q_fn_date q_dedup_containment
-    q_dedup_ngram_jaccard q_dedup_ngram_prefix q_dedup_incremental_fuzzy
-    q_split_leakage q_dedup_clusters q_dedup_minhash_audit
-    q_stream_tumbling q_stream_sliding q_stream_session
-    q_stream_multires q_stream_watermark_late q_stream_dedup
-    q_stream_stateful q_stream_sink q_stream_foreach_batch
-    q_stream_cdc_upsert q_stream_join_static q_stream_join_interval
-    q_stream_join_outer q_stream_join_semi q_stream_stateful_tws
-    q_dedup_simhash q_dedup_minhash q_dedup_span q_geo_knn q_select_dsir
-    q_drift_ks q_classify_nb q_agg_heavy_hitters q_text_novelty
-    q_stats_kruskal q_tpch_q17 q_tpch_q20 q_tpch_q21 q_fn_array q_fn_map
-    q_vec_centroid q_vec_quantize q_retention_cohorts q_udf_cogroup
-    q_agg_weighted q_agg_multi_distinct q_agg_listagg q_agg_grouping_id
-    q_agg_higher_moments q_agg_approx_quantile q_win_rank q_win_analytic
-    q_win_frame_rows
-    """.split()
-)
-
-_DRIVER_ADJUDICATED = frozenset(_DRIVER_ADJUDICATED_ORDERED)
-
-#: Keys whose implementation or oracle changed in the CURRENT round —
-#: ALWAYS fronted into the driver's sampled prefix regardless of prior
-#: adjudication (ADVICE r3: a rewrite back-listed behind
-#: _DRIVER_ADJUDICATED would never be re-graded externally). This
-#: guard is permanent: reset the list each round to the keys actually
-#: touched.
-_MODIFIED_THIS_ROUND: list[str] = [
-    # llm/similarity.py, pq.py, ivf.py: one shared probe predicate,
-    # probe fetch, batch top-k, sequential fold and final cosine rank,
-    # and no session write of the Arrow batch size
-    "q_sim_knn_exact", "q_sim_knn_blas", "q_sim_lsh", "q_sim_pq",
-    "q_sim_ivf", "q_sim_lsh_audit", "q_sim_pq_audit", "q_sim_ivf_audit",
-    "q_sim_ivf_index",
-    # operators/stats.py: empty input returns the empty frame
-    "q_stats_kruskal",
-    # r14 reworks that no driver verdict covers yet
-    "q_agg_sketch_theta", "q_text_perplexity_bigram",
-    # catalog.read_parquet: fixture reads reuse the inferred footer
-    # schema, and the staged events copies are keyed by source file
-    "q_tpch_q1", "q_tpch_q3", "q_tpch_q5", "q_tpch_q6", "q_ctas",
-    "q_stream_watermark_late",
-    # operators/scans.py: reads lineitem through catalog.load
-    "q_scan_file_metadata",
-    # streaming/stateful.py: the staged-source schema probe
-    "q_stream_cdc_upsert",
-    # llm/multimodal.py: one phash_bands pass, band buckets, no self-join
-    "q_multimodal_phash",
-    # streaming/runtime.py: replays start on the FileSystem checkpoint
-    # manager with one wave of state partitions and drop their sink
-    # view (q_stream_watermark_late is listed above); q_ctas registers
-    # only the two views it reads (listed above)
-    "q_stream_stateful", "q_stream_stateful_tws", "q_stream_pyds",
-]
-
-#: One-time rotation priority — RETIRED as of r10 (every oracle-backed
-#: key now has at least one external driver verdict; cumulative
-#: r1-r10: zero genuine fails). From r11 on the driver's 50-slot
-#: prefix is _MODIFIED_THIS_ROUND + stalest-first fill from
-#: _DRIVER_ADJUDICATED_ORDERED, so the full 401-key surface
-#: re-adjudicates roughly every 8-10 rounds with no bookkeeping
-#: beyond the per-round _MODIFIED reset and the post-CORRECTNESS
-#: append-to-tail (see the list docstring above). The round-13
-#: playbook (r12 keys to tail, _MODIFIED reset, canary repin on the
-#: unchanged 401 pool) was executed in r13.
-#:
-#: ROUND-14 PLAYBOOK (after CORRECTNESS_r13 lands): (1) MOVE r13's
-#: graded keys to the tail of _DRIVER_ADJUDICATED_ORDERED in the
-#: CORRECTNESS_r13 order; (2) reset _MODIFIED_THIS_ROUND to whatever
-#: r14 actually touches; (3) repin tools/canary_adjudicated.py's
-#: round in test_canary.py; (4) if any bench SECTION query's
-#: implementation changes, re-derive ANCHOR_TPCH_SF01/ANCHOR_LLM_SF01
-#: as the per-query median over 3 contended-false FULL bench.py runs
-#: (bench.py docstring — NOT the standalone tool loop).
-_ROUND_PRIORITY: list[str] = []
-
-
-def _sample_order(names: list[str]) -> list[str]:
-    modified = [n for n in _MODIFIED_THIS_ROUND if n in names]
-    taken = set(modified)
-    prioritized = [n for n in _ROUND_PRIORITY if n in names and n not in taken]
-    taken.update(prioritized)
-    rest = [
-        n
-        for n in names
-        if n not in _DRIVER_ADJUDICATED and n not in taken
-    ]
-    # oracle-backed keys ahead of rows-only ones: a rows-only key in the
-    # sampled prefix burns a slot on a weak verdict (each rows-only key
-    # keeps an oracle-backed *_audit companion that IS sampled)
-    fresh_oracle = [n for n in rest if _REGISTRY[n].oracle is not None]
-    fresh_rows_only = [n for n in rest if _REGISTRY[n].oracle is None]
-    # Post-rotation fill (r10): with every key adjudicated, spare
-    # prefix slots land here — order by adjudication age (append order
-    # in _DRIVER_ADJUDICATED_ORDERED, r1 grades first) so free driver
-    # capacity re-grades the STALEST external verdicts, oracle-backed
-    # ahead of rows-only for the same slot-economy reason as above.
-    stale_rank = {n: i for i, n in enumerate(_DRIVER_ADJUDICATED_ORDERED)}
-    done = sorted(
-        (n for n in names if n in _DRIVER_ADJUDICATED and n not in taken),
-        key=lambda n: (
-            _REGISTRY[n].oracle is None,
-            stale_rank.get(n, len(stale_rank)),
-        ),
-    )
-    return modified + prioritized + fresh_oracle + fresh_rows_only + done
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration order."""
     _load_all()
-    return {
-        name: _REGISTRY[name].fn for name in _sample_order(list(_REGISTRY))
-    }
+    return {name: spec.fn for name, spec in _REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
+    """Oracle SQL of every oracle-backed query, in registration order."""
     _load_all()
-    with_oracle = [n for n in _REGISTRY if _REGISTRY[n].oracle is not None]
-    return {name: _REGISTRY[name].oracle for name in _sample_order(with_oracle)}
+    return {
+        name: spec.oracle
+        for name, spec in _REGISTRY.items()
+        if spec.oracle is not None
+    }
 
 
 def get(name: str) -> QuerySpec:

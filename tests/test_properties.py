@@ -242,11 +242,11 @@ def test_sample_prefix_invariant_under_partitioning(spark, sf_dir):
     partial-aggregation order — a separate environment axis the
     driver's host may legitimately differ on (added r8, ahead of the
     float-heavy window/time-series block fronting this round)."""
-    from oke_cassandra_spark_locality_demo_spark import registry
+    import __spark_entry__ as entry
 
     from .parity import _canon
 
-    prefix = list(registry.all_queries().items())[:50]
+    prefix = list(entry.queries().items())[:50]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
@@ -274,75 +274,113 @@ def test_sample_prefix_invariant_under_partitioning(spark, sf_dir):
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
 
 
+def _latest_grades(directory) -> dict[str, tuple[int, int]]:
+    """Each key's latest (round, position) across the CORRECTNESS files,
+    read independently of __spark_entry__.grades."""
+    import json
+    import pathlib
+
+    latest: dict[str, tuple[int, int]] = {}
+    files = pathlib.Path(directory).glob("CORRECTNESS_r*.json")
+    for path in sorted(files, key=lambda p: int(p.stem.split("_r")[1])):
+        rnd = int(path.stem.split("_r")[1])
+        for pos, key in enumerate(json.loads(path.read_text())):
+            latest[key] = (rnd, pos)
+    return latest
+
+
 def test_driver_sample_prefix_is_oracle_backed():
-    """The correctness harness adjudicates the first 50 keys of
-    queries(); the rotation in registry._sample_order must keep that
-    prefix from burning slots on ACCIDENTAL rows-only weak verdicts,
-    and must front this round's fixed keys. A rows-only key is allowed
-    in the prefix only when it is there deliberately — modified this
-    round (the honesty guard outranks slot economy) or explicitly
-    prioritized (e.g. the A5 q_meta_engine_info closure, VERDICT r4
-    item 6)."""
+    """The correctness harness grades the first 50 keys of
+    __spark_entry__.queries(). That prefix must hold every key changed
+    since its last grade (the honesty guard: a changed key is always
+    re-graded externally), must not burn a slot on a rows-only key
+    unless that key changed, and must fill spare slots with the
+    stalest grades first: never-graded keys, then graded oracle-backed
+    keys by the (round, position) of their latest grade."""
+    import os
+
+    import __spark_entry__ as entry
     from oke_cassandra_spark_locality_demo_spark import registry
 
-    q = list(registry.all_queries())
-    o = registry.all_oracles()
-    deliberate = set(registry._MODIFIED_THIS_ROUND) | set(
-        registry._ROUND_PRIORITY
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    latest = _latest_grades(root)
+    q = list(entry.queries())
+    o = entry.oracle_sql()
+    assert list(o) == [k for k in q if k in o]
+    changed = {
+        k
+        for rnd, keys in entry.CHANGED_SINCE_GRADE.items()
+        for k in keys
+        if latest.get(k, (rnd,))[0] <= rnd
+    }
+    for k in changed:
+        assert k in q[:50], f"{k} changed since its grade but fell out of the prefix"
+    rows_only = [k for k in q[:50] if k not in o and k not in changed]
+    assert not rows_only, rows_only
+    spare = [k for k in q[:50] if k not in changed]
+    never_graded = sorted(
+        (k for k in registry.all_queries() if k not in latest and k not in changed),
+        key=lambda k: k not in o,
     )
-    accidental_rows_only = [
-        k for k in q[:50] if k not in o and k not in deliberate
-    ]
-    assert not accidental_rows_only, accidental_rows_only
-    for k in registry._MODIFIED_THIS_ROUND:
-        assert k in q[:50], f"{k} fell out of the adjudicated prefix"
-    # VERDICT r5 item 6: while never-adjudicated keys remain, the
-    # rotation must never waste a sampled slot re-grading an
-    # already-adjudicated key unless that key was modified this round
-    # (the honesty guard is the ONLY legitimate reason for a repeat).
-    # "remaining" = never-adjudicated keys NOT already holding a
-    # sampled slot this round (a fronted OR fresh-ordered key inside
-    # the 50-slot prefix has its slot; it isn't waiting on one — the
-    # r11 shape: a brand-new key rides the fresh_oracle tier ahead of
-    # the stalest-first fill, so its presence must not forbid the
-    # spare-slot re-grades behind it)
-    never_adjudicated = [
-        k
-        for k in q
-        if k not in registry._DRIVER_ADJUDICATED
-        and k not in registry._ROUND_PRIORITY
-        and k not in registry._MODIFIED_THIS_ROUND
-        and k not in q[:50]
-    ]
-    repeats = [
-        k
-        for k in q[:50]
-        if k in registry._DRIVER_ADJUDICATED
-        and k not in registry._MODIFIED_THIS_ROUND
-        and k not in registry._ROUND_PRIORITY
-    ]
-    if never_adjudicated:
-        assert not repeats, f"adjudicated keys burning prefix slots: {repeats}"
-    else:
-        # Post-rotation (r10+): every key has an external verdict, so
-        # spare prefix slots are FREE re-grades — they must go to the
-        # stalest grades first (append order in
-        # _DRIVER_ADJUDICATED_ORDERED), oracle-backed ahead of
-        # rows-only, so the driver's spare capacity walks the old-key
-        # space round-over-round instead of repeating an arbitrary
-        # registration-order head.
-        fronted = set(registry._MODIFIED_THIS_ROUND) | set(
-            registry._ROUND_PRIORITY
+    expected = never_graded + sorted(
+        (k for k in o if k in latest and k not in changed),
+        key=latest.__getitem__,
+    )
+    assert spare == expected[: len(spare)], (
+        "spare prefix slots must go to never-graded keys, then to the "
+        f"stalest grades: got {spare[:5]}…, want {expected[:5]}…"
+    )
+
+
+def test_changed_since_grade_lists_no_regraded_key():
+    """An entry of CHANGED_SINCE_GRADE that a later CORRECTNESS file has
+    graded no longer leads the sample; delete it."""
+    import __spark_entry__ as entry
+
+    assert entry.regraded_changes() == []
+
+
+def test_sample_order_follows_correctness_files(tmp_path, monkeypatch):
+    """Over fake CORRECTNESS files: a re-grade moves a key to the tail,
+    a CHANGED_SINCE_GRADE entry stays first until a later round grades
+    it and is then reported, and no files means registration order."""
+    import json
+
+    import __spark_entry__ as entry
+    from oke_cassandra_spark_locality_demo_spark import registry
+
+    names = list(registry.all_queries())
+    oracles = registry.all_oracles()
+    assert names == list(registry._REGISTRY)
+    assert entry._sample_order(str(tmp_path)) == names
+
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps(
+            {
+                k: {}
+                for k in ("q_dedup_minhash", "q_tpch_q1", "q_tpch_q3", "q_tpch_q5")
+            }
         )
-        expected = [
-            k
-            for k in registry._DRIVER_ADJUDICATED_ORDERED
-            if k in q and k not in fronted and k in o
-        ]
-        assert repeats == expected[: len(repeats)], (
-            "post-rotation spare slots must re-grade stalest-first: "
-            f"got {repeats[:5]}…, want {expected[:5]}…"
-        )
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({k: {} for k in ("q_tpch_q1", "q_tpch_q3")})
+    )
+    monkeypatch.setattr(
+        entry, "CHANGED_SINCE_GRADE", {1: ("q_tpch_q3",), 2: ("q_tpch_q5",)}
+    )
+    order = entry._sample_order(str(tmp_path))
+    graded = ("q_dedup_minhash", "q_tpch_q1", "q_tpch_q3", "q_tpch_q5")
+    fresh = [k for k in names if k not in graded]
+    # q_dedup_minhash is rows-only: stalest grade, but after every
+    # oracle-backed graded key
+    assert "q_dedup_minhash" not in oracles
+    assert order == (
+        ["q_tpch_q5"]
+        + [k for k in fresh if k in oracles]
+        + [k for k in fresh if k not in oracles]
+        + ["q_tpch_q1", "q_tpch_q3", "q_dedup_minhash"]
+    )
+    assert entry.regraded_changes(str(tmp_path)) == [(1, "q_tpch_q3")]
 
 
 def test_oracle_float_parity_lint():

@@ -39,8 +39,11 @@ sf = "/root/testdata/sf0.001"
 # one key per pickled-by-module-reference surface (each verified to
 # raise ModuleNotFoundError / PYTHON_DATA_SOURCE_ERROR from a foreign
 # cwd when the addPyFile shipping is disabled): grouped-agg pandas
-# UDF, mapInPandas, Python data source
-for key in ("q_udf_grouped_agg", "q_multimodal_binary", "q_source_pyds_scan"):
+# UDF, mapInPandas, Python data source (batch and streaming planner)
+for key in (
+    "q_udf_grouped_agg", "q_multimodal_binary", "q_source_pyds_scan",
+    "q_stream_pyds",
+):
     n = registry.get(key).fn(spark, sf).count()
     assert n > 0, (key, n)
 print("CWD_INDEPENDENT_OK")

@@ -29,15 +29,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_CANARY_SF", "/root/testdata/sf0.1")
 
 
 def canary_keys(round_no: int) -> list[str]:
-    """The round's canary: CANARY_SIZE oracle-backed adjudicated keys,
-    drawn by a random.Random seeded with the round number over the
-    SORTED adjudicated set — same list for everyone who runs this."""
+    """The round's canary: CANARY_SIZE oracle-backed graded keys (those
+    in the CORRECTNESS files), drawn by a random.Random seeded with the
+    round number over the SORTED graded set — same list for everyone
+    who runs this."""
+    import __spark_entry__ as entry_mod
     from oke_cassandra_spark_locality_demo_spark import registry
 
     oracles = registry.all_oracles()
-    pool = sorted(
-        k for k in registry._DRIVER_ADJUDICATED if k in oracles
-    )
+    pool = sorted(k for k in entry_mod.grades() if k in oracles)
     return random.Random(round_no).sample(pool, CANARY_SIZE)
 
 

@@ -4,8 +4,8 @@ drive_contract.py run doesn't label: pre-adjudication checks of an
 upcoming rotation block, multi-scale coverage of a named key list,
 or a quick re-grade after a localized change.
 
-Keys come from argv; ``--remaining`` substitutes the keys not yet in
-registry._DRIVER_ADJUDICATED.
+Keys come from argv; ``--remaining`` substitutes the keys that no
+CORRECTNESS file has graded yet (``__spark_entry__.grades``).
 Rows-only keys (no oracle_sql entry) get the same >0-rows check the
 external driver applies.
 
@@ -34,10 +34,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SUBSET_SF", "/root/testdata/sf0.01")
 
 
 def _remaining_keys() -> list[str]:
-    from oke_cassandra_spark_locality_demo_spark import registry
+    import __spark_entry__ as entry_mod
 
-    adjudicated = set(registry._DRIVER_ADJUDICATED)
-    return [k for k in registry.all_queries() if k not in adjudicated]
+    graded = entry_mod.grades()
+    return [k for k in entry_mod.queries() if k not in graded]
 
 
 def main() -> None:
