@@ -75,6 +75,13 @@ CHANGED_SINCE_GRADE: dict[int, tuple[str, ...]] = {
         # streaming/runtime.py: FileSystem checkpoint manager, one
         # wave of state partitions
         "q_stream_stateful", "q_stream_stateful_tws", "q_stream_pyds",
+        # llm/dedup.py: _spread decides from the documents file's row
+        # groups (q_agg_sketch_theta, listed above, derives its
+        # intersection band from the estimate's variance)
+        "q_dedup_simhash", "q_dedup_span", "q_dedup_containment",
+        "q_dedup_ngram_jaccard", "q_dedup_ngram_prefix", "q_dedup_minhash",
+        "q_dedup_incremental_fuzzy", "q_contamination", "q_split_leakage",
+        "q_text_boilerplate", "q_text_novelty",
     ),
 }
 

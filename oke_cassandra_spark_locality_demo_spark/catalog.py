@@ -137,14 +137,29 @@ def _stage_events_us(sf_dir: str) -> str:
     return out
 
 
+def _table_path(sf_dir: str, name: str) -> str:
+    """The parquet file Spark reads for fixture table ``name``."""
+    if name == "events":
+        return _stage_events_us(sf_dir)
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a new relation. Schema comes from the
     parquet footer (self-describing, the analog of connector schema
     inference), inferred once per application and file identity and
     then reused (`read_parquet`)."""
-    if name == "events":
-        return read_parquet(spark, _stage_events_us(sf_dir))
-    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, _table_path(sf_dir, name))
+
+
+def row_groups(sf_dir: str, name: str) -> int:
+    """Row groups in fixture table ``name``, read from its parquet footer
+    (no Spark job; ~0.1 ms). Spark gives each row group to the one split
+    that holds its midpoint, so this bounds how many tasks of a scan
+    read any rows, whatever the split count."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(_table_path(sf_dir, name)).metadata.num_row_groups
 
 
 def users_df(spark: SparkSession) -> DataFrame:

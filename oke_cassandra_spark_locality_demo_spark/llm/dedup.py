@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, row_groups
 from ..registry import register
 
 #: MinHash parameters: 64 hashes = 16 bands × 4 rows → s-curve threshold
@@ -69,23 +69,28 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep.select("r.doc_id", "r.lang", "r.source", "r.text")
 
 
-def _spread(df: DataFrame) -> DataFrame:
+def _spread(df: DataFrame, sf_dir: str | None = None) -> DataFrame:
     """Re-spread a narrow scan across all cores before CPU-heavy per-row
     derivation (shingle/gram explosion, 64-bit fingerprint sums): a
-    small-but-dense input — e.g. one parquet split holding the whole
-    corpus sample — would otherwise pin the derivation stage to ONE
-    task while 31 cores idle (measured: the q_dedup_span gram pipeline
-    dropped 1.8s → 1.0s at sf0.1). No-op when the scan already has at
-    least cluster parallelism (the 100 TB case, where thousands of
-    splits exist and a repartition would pointlessly shuffle raw
-    text)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
+    small-but-dense input — e.g. one parquet row group holding the
+    whole corpus sample — would otherwise pin the derivation stage to
+    ONE task while 31 cores idle (measured: the q_dedup_span gram
+    pipeline dropped 1.8s → 1.0s at sf0.1). No-op when the `documents`
+    table of ``sf_dir``, which ``df`` reads, has at least cluster
+    parallelism in row groups (the 100 TB case, where a repartition
+    would pointlessly shuffle raw text). Row groups, not splits: a
+    split that holds no row group's midpoint reads no rows, and the
+    count comes from the file's footer, where
+    ``df.rdd.getNumPartitions()`` planned the whole DataFrame on every
+    build. A frame with no source file (``sf_dir`` None) is always
+    respread."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if sf_dir is not None and row_groups(sf_dir, "documents") >= n:
         return df
-    return df.repartition(sc.defaultParallelism)
+    return df.repartition(n)
 
 
-def _shingles(df: DataFrame, k: int = 3) -> DataFrame:
+def _shingles(df: DataFrame, k: int = 3, sf_dir: str | None = None) -> DataFrame:
     """(doc_id, shingle) pairs: distinct k-word shingles of normalized text.
 
     Zero-UDF expression, built as a k-way zip of shifted copies of the
@@ -102,7 +107,7 @@ def _shingles(df: DataFrame, k: int = 3) -> DataFrame:
     normalized text as the single shingle (same as the per-position
     form and the DuckDB oracle).
     """
-    return _spread(df).select(
+    return _spread(df, sf_dir).select(
         "doc_id", F.explode(_shingle_array(k)).alias("shingle")
     )
 
@@ -411,7 +416,7 @@ def _shared_shingles(spark, sf_dir, d: DataFrame) -> DataFrame:
     memo = _ngram_memo_get(spark, sf_dir, variant="shingles3")
     if memo is not None:
         return memo[0]
-    sh = _pin(_shingles(d, 3))
+    sh = _pin(_shingles(d, 3, sf_dir))
     _ngram_memo_put(spark, sf_dir, (sh,), variant="shingles3")
     return sh
 
@@ -477,7 +482,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         d = load(spark, sf_dir, "documents")
         sh = _stage_barrier(
-            _shingles(d, 3).select("doc_id", F.xxhash64("shingle").alias("sh"))
+            _shingles(d, 3, sf_dir).select("doc_id", F.xxhash64("shingle").alias("sh"))
         )
         dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
         # corpus-adaptive generalized-prefix order (r12; see
@@ -742,7 +747,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Shingles travel as xxhash64 keys, not strings."""
     d = load(spark, sf_dir, "documents")
     sh = _stage_barrier(
-        _shingles(d, _CONTAM_K).select(
+        _shingles(d, _CONTAM_K, sf_dir).select(
             "doc_id", F.xxhash64("shingle").alias("sh")
         )
     )
@@ -1034,7 +1039,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-word buffer updates plus the doc exchange were the fingerprint
     pipeline's floor, not the explode or the hash)."""
     d = load(spark, sf_dir, "documents")
-    wh = _spread(d).select(
+    wh = _spread(d, sf_dir).select(
         "doc_id",
         F.explode(F.split(_norm_text(F.col("text")), " ")).alias("w"),
     ).select("doc_id", F.xxhash64("w").alias("h"))
@@ -1640,10 +1645,12 @@ def q_dedup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     128 bits are ~10^-17 at 10^11 docs.
     Semantics ref: reference has no text ops (HCL/bash only —
     userdata/cloudinit.sh); this extends SURVEY §2.3's dedup mandate."""
-    return duplicated_spans(load(spark, sf_dir, "documents"))
+    return duplicated_spans(load(spark, sf_dir, "documents"), sf_dir=sf_dir)
 
 
-def duplicated_spans(d: DataFrame, K: int = SPAN_K) -> DataFrame:
+def duplicated_spans(
+    d: DataFrame, K: int = SPAN_K, sf_dir: str | None = None
+) -> DataFrame:
     """Core of q_dedup_span over any (doc_id, text) relation — split out
     so tests can drive hand-built multi-span corpora (the fixture's
     planted near-dups are whole-document copies, which only ever produce
@@ -1664,7 +1671,7 @@ def duplicated_spans(d: DataFrame, K: int = SPAN_K) -> DataFrame:
         )
         acc = F.zip_with(acc, shifted, lambda a, b: F.concat_ws(" ", a, b))
     gram_arr = F.slice(acc, 1, (F.col("n_tokens") - K + 1).cast("int"))
-    grams = _spread(docs.filter(F.col("n_tokens") >= K)).select(
+    grams = _spread(docs.filter(F.col("n_tokens") >= K), sf_dir).select(
         "doc_id", F.posexplode(gram_arr).alias("pos", "gram")
     )
     gh = _stage_barrier(
@@ -1845,7 +1852,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuse of this sizes frame as a general doc-size relation must
     # null-guard first. The fixture contract pins text non-null at
     # every SF (tests/test_llm_ops.py::test_fixture_contract_text_non_null).
-    sizes = _spread(d).select(
+    sizes = _spread(d, sf_dir).select(
         "doc_id",
         F.size(_shingle_array(CONTAINMENT_SHINGLE_K)).cast("long").alias("n_sh"),
     )

@@ -1070,7 +1070,7 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _shingles
 
     d = load(spark, sf_dir, "documents")
-    sh = _shingles(d, _BOILER_K)
+    sh = _shingles(d, _BOILER_K, sf_dir)
     n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
     marked = sh.withColumn(
         "gdf", F.count(F.lit(1)).over(W.partitionBy("shingle"))

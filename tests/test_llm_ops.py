@@ -451,6 +451,30 @@ def test_dedup_span_merges_intervals(spark):
     assert got[103] == (26, 16, 1, 16)
 
 
+def test_spread_counts_row_groups_not_splits(spark, tmp_path, monkeypatch):
+    """_spread decides from the documents file's row-group count, read
+    from its parquet footer: a file with fewer row groups than cores is
+    respread, one with as many is left alone, and neither decision plans
+    the DataFrame (no ``df.rdd``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrame
+
+    from oke_cassandra_spark_locality_demo_spark.catalog import load
+    from oke_cassandra_spark_locality_demo_spark.llm.dedup import _spread
+
+    n = spark.sparkContext.defaultParallelism
+    docs = pa.table({"doc_id": list(range(4 * n)), "text": ["a b c"] * (4 * n)})
+    monkeypatch.setattr(DataFrame, "rdd", property(lambda df: pytest.fail("planned")))
+    for groups in (1, n):
+        sf = tmp_path / str(groups)
+        sf.mkdir()
+        pq.write_table(docs, sf / "documents.parquet", row_group_size=4 * n // groups)
+        d = load(spark, str(sf), "documents")
+        assert (_spread(d, str(sf)) is d) == (groups >= n), groups
+    assert _spread(d) is not d  # no source file: always respread
+
+
 def test_multimodal_resize_binary_plumbing(spark, sf_dir):
     """The resize worker must emit a real BINARY column of exactly
     _RESIZE_TARGET bytes per image (the graded projection drops it, so
