@@ -1,194 +1,57 @@
 #!/usr/bin/env python
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark runner: the headline, TPC-H and LLM suites at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "ratio_vs_anchor": {...}, "load_check":
-{...}, "sf": ...}. Each query is executed to completion via a
-count-style action (no driver-side collect of payloads).
+Every timing builds the key's DataFrame and writes it to Spark's noop
+sink (``time_key``), so every output column is computed. A ``count()``
+would let Catalyst prune each column it does not read: a column whose
+Python UDF raises still counts. Each key records its min-of-N wall
+seconds, or -1.0 if it raised.
 
-Contention hardening (the r2 artifact recorded a 3.3x "regression" that
-was pure host contention): a bounded wait-until-idle gate ahead of the
-first repeat, min-of-5 per query, the per-query ratio vs the round-1
-anchor is embedded in the output, and a load check (1-min loadavg at
-gate-open AND post-warm-up, + median anchor ratio) makes a contended
-run detectable from the artifact alone — a near-uniform ratio
-inflation across all queries is contention, not a code regression.
-The gate-open sample is the contention signal; the post-warm-up one
-is self-inflicted by the warm-up queries (VERDICT r7 #4).
+Usage:
+    python bench.py
+        Prints ONE JSON line (metric/value/unit/queries/sf/action/
+        deployment) and writes every suite's timings with the
+        deployment block to BENCH_DETAIL.json beside this script.
+    python bench.py compare PARENT.json [PARENT2.json ...] CHANGE.json
+        Same-host comparison of saved BENCH_DETAIL.json files. Flags
+        every key whose CHANGE time exceeds REGRESSION_RATIO x its
+        largest PARENT time and exits 1 if any key is flagged. Refuses
+        (exit 2) files taken on different deployments.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
-
-#: round-1 anchor: the ROUND-1 CODE's steady-state floor at sf0.1 on
-#: local[32] — the reference repo publishes no numbers (3-row demo
-#: table; BASELINE.md), so round 1 is the throughput anchor every
-#: later round is compared against.
-#:
-#: RE-BASELINED r6 (ADVICE r5, medium): the original BENCH_r01.json
-#: values were min-of-2 single-run numbers while REPEATS later rose to
-#: 5, so ratio_vs_anchor compared numbers taken under different repeat
-#: disciplines. These values were re-measured from the round-1 tree
-#: itself (git worktree @ 14236e2, the end-of-round-1 snapshot) on an
-#: idle host (loadavg < 1): three independent min-of-5 runs, anchor =
-#: per-query MEDIAN across the runs — i.e. the EXPECTED value of
-#: exactly the measurement each later round produces (one min-of-5
-#: pass), not the 15-sample floor (elementwise min across all runs
-#: measured ~7.406 s total, but comparing a 5-sample min against a
-#: 15-sample floor re-introduces the bias in the other direction —
-#: the three runs' totals were 10.08/7.56/8.04 s, so whole-run
-#: variance is real and the median is the robust center).
-#: Ratios in r1-r5 artifacts used the old min-of-2 anchor
-#: (total 9.709 s vs 8.196 s here, a ~1.18× methodology factor) and
-#: are not directly comparable to r6+ ratios. The artifact records
-#: anchor_methodology for exactly this reason.
-ANCHOR_SF01 = {
-    "q_flagship_pricing_summary": 0.466,
-    "q_scan_pushdown": 0.221,
-    "q_join_inner": 0.328,
-    "q_join_broadcast": 0.456,
-    "q_join_multiway": 0.768,
-    "q_join_asof": 0.299,
-    "q_agg_hash": 0.333,
-    "q_agg_distinct": 0.211,
-    "q_win_rank": 0.159,
-    "q_topk_per_group": 0.864,
-    "q_stream_tumbling": 0.249,
-    "q_stream_session": 0.344,
-    "q_dedup_exact": 0.248,
-    "q_dedup_ngram_jaccard": 1.246,
-    "q_sim_knn_blas": 0.377,
-    "q_text_tfidf": 0.821,
-    "q_multimodal_cols": 0.243,
-    "q_pipeline_e2e": 0.563,
-}
-
-#: min-of-5 on the headline: consecutive full runs on this host were
-#: measured 8.50 vs 9.73 s (±15%) with no competing process — the VM's
-#: background noise is bursty, and two extra repeats per query (~+15 s
-#: total) reliably catch a quiet window per query where min-of-3 can
-#: have all three samples land in the same noisy burst
-REPEATS = 5
-
-#: Per-query anchors for the SECONDARY suites (VERDICT r10 item 1):
-#: r10's driver snapshot carried a 40% tpch-section inflation that only
-#: a judge-side idle re-run could adjudicate, because the sections had
-#: no anchors — the artifact could not tell host noise from a real
-#: regression on its own. These anchors make the sections
-#: self-adjudicating with the same machinery as the headline.
-#:
-#: Methodology differs from ANCHOR_SF01 deliberately: the headline
-#: anchors are the ROUND-1 code's floor (they measure cumulative
-#: progress vs r1), while these are the CURRENT code's idle-host
-#: floor. Section ratios are therefore pure DRIFT/CONTENTION signals:
-#: ~1.0 on a quiet host, uniformly inflated under load,
-#: single-query-spiked on a real plan regression.
-#:
-#: Measured as the per-query MEDIAN over three contended-false FULL
-#: bench.py runs (re-baselined r13 at HEAD after the optimization
-#: round's reworks — 14 section-query implementations changed, so the
-#: r12 anchors stopped describing the current code; the three r13
-#: runs spread ±15% on section totals, which the per-query median
-#: splice absorbs; previously re-baselined r12 at HEAD after the r12
-#: hardenings, per the r11 playbook note: the r11 anchors predated
-#: the ckpt-release speedup and carried residual host noise — the
-#: refresh moved tpch anchors down ~17% median and llm ~8%, so
-#: section ratios read ≈1.0 on unchanged code again; zero retries in
-#: all three runs) — NOT over standalone section
-#: loops: section timings are context-sensitive to the session state
-#: the headline/tpch passes accumulate before them (measured r11:
-#: q_graph_kcore runs 0.56 s in a fresh session but ~3.3 s at its
-#: bench position after 5×headline + 2×tpch — caches, broadcasts, JVM
-#: heap aging). Anchors must embed the same context as the
-#: measurement they will divide, so the anchor recipe IS the bench
-#: run itself. Re-baseline whenever a section query's implementation
-#: changes: 3× `python bench.py` on an idle host, keep contended-false
-#: runs, splice the medians (tools/measure_section_anchors.py
-#: documents both recipes).
-ANCHOR_TPCH_SF01 = {
-    "q_tpch_q1": 0.405,
-    "q_tpch_q2": 0.874,
-    "q_tpch_q3": 0.922,
-    "q_tpch_q4": 0.888,
-    "q_tpch_q5": 1.108,
-    "q_tpch_q6": 0.198,
-    "q_tpch_q7": 0.961,
-    "q_tpch_q8": 1.321,
-    "q_tpch_q9": 0.964,
-    "q_tpch_q10": 0.842,
-    "q_tpch_q11": 0.751,
-    "q_tpch_q12": 0.534,
-    "q_tpch_q13": 0.514,
-    "q_tpch_q14": 0.352,
-    "q_tpch_q15": 0.554,
-    "q_tpch_q16": 0.417,
-    "q_tpch_q17": 0.504,
-    "q_tpch_q18": 0.834,
-    "q_tpch_q19": 0.45,
-    "q_tpch_q20": 0.942,
-    "q_tpch_q21": 1.289,
-    "q_tpch_q22": 0.481,
-}
-
-ANCHOR_LLM_SF01 = {
-    "q_dedup_span": 2.233,
-    "q_dedup_containment": 1.194,
-    "q_dedup_minhash": 0.709,
-    "q_dedup_simhash": 2.604,
-    "q_text_bm25": 0.815,
-    "q_shuffle_epoch": 0.425,
-    "q_agg_sketch_theta": 1.002,
-    "q_sim_lsh": 1.129,
-    "q_sample_weighted": 0.195,
-    "q_pack_sequences": 0.147,
-    "q_multimodal_resize": 0.316,
-    "q_text_bpe_train": 0.329,
-    "q_text_bpe_encode": 0.419,
-    "q_text_boilerplate": 0.761,
-    "q_join_asof_tolerance": 0.242,
-    "q_dedup_incremental_fuzzy": 0.545,
-    "q_corpus_card": 0.222,
-    "q_text_perplexity_bigram": 0.985,
-    "q_text_bpe_fertility": 0.357,
-    "q_privacy_kanon": 0.177,
-    "q_select_dsir": 1.423,
-    "q_order_curriculum": 0.225,
-    "q_multimodal_phash": 0.548,
-    "q_drift_ks": 0.486,
-    "q_classify_nb": 1.544,
-    "q_split_leakage": 1.424,
-    "q_text_novelty": 0.633,
-    "q_quality_gopher": 0.261,
-    "q_dedup_url": 0.495,
-    "q_text_rake": 0.87,
-    "q_agg_heavy_hitters": 1.728,
-    "q_geo_radius_join": 0.309,
-    "q_geo_knn": 0.925,
-    "q_graph_kcore": 1.841,
-    "q_stats_permutation": 0.415,
-    "q_multimodal_scenecut": 0.317,
-    "q_agg_abc_pareto": 1.51,
-    "q_drift_jsd": 0.374,
-    "q_stats_kruskal": 1.235,
-    "q_vec_jl_projection": 0.37,
-    "q_join_asof_nearest": 0.309,
-    "q_geo_grid_density": 0.359,
-    "q_agg_ohlc": 0.27,
-    "q_export_manifest": 0.202,
-    "q_ts_interpolate_linear": 0.309,
-    "q_multimodal_decode_real": 0.339,
-}
+from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from oke_cassandra_spark_locality_demo_spark import registry
+from oke_cassandra_spark_locality_demo_spark.catalog import load
 from oke_cassandra_spark_locality_demo_spark.session import build_session
+
+#: min-of-5 on the headline, min-of-2 on the TPC-H and LLM suites: the
+#: min of a few repeats is the steady-state figure, one repeat swings
+#: with the host's background load
+REPEATS = 5
+SECONDARY_REPEATS = 2
+
+#: ``compare`` flags a key whose change time exceeds this multiple of
+#: its largest parent time. With an A/B/A run the two parents bound
+#: the host's noise on that key, so a one-key 1.8x slowdown flags
+#: while parents within 1.2x of each other, and +-15% noise on every
+#: key (at most 1.15/0.85 = 1.35x) does not.
+REGRESSION_RATIO = 1.5
+
+#: The driver's artifact keeps only the last ~2 KB of stdout, so the
+#: summary line must fit that window whole. Budget below the 2000-char
+#: capture with margin for a stray warning line.
+SUMMARY_LINE_BUDGET = 1900
 
 #: headline set: one per operator family, weighted toward shuffle-heavy shapes
 HEADLINE = [
@@ -212,10 +75,9 @@ HEADLINE = [
     "q_pipeline_e2e",
 ]
 
-#: LLM-data-pipeline secondary suite (mandate operators not already in
-#: the headline) — the training-data-build throughput statement: dedup
-#: tiers, ANN, ranking, sketches, corpus ops, multimodal, tokenizer.
-#: Also the plan-dump set for tools/dump_plans.py.
+#: LLM-data-pipeline secondary suite (operators not already in the
+#: headline): dedup tiers, ANN, ranking, sketches, corpus ops,
+#: multimodal, tokenizer. Also the plan-dump set for tools/dump_plans.py.
 LLM_SECONDARY = [
     "q_dedup_span",
     "q_dedup_containment",
@@ -228,8 +90,6 @@ LLM_SECONDARY = [
     "q_sample_weighted",
     "q_pack_sequences",
     "q_multimodal_resize",
-    # r5 additions: tokenizer training/encoding, boilerplate pruning,
-    # staleness-bounded as-of, batch-vs-index fuzzy incremental dedup
     "q_text_bpe_train",
     "q_text_bpe_encode",
     "q_text_boilerplate",
@@ -247,9 +107,6 @@ LLM_SECONDARY = [
     "q_split_leakage",
     "q_text_novelty",
     "q_quality_gopher",
-    # late-r5 additions: web-corpus URL canonicalization, RAKE keywords,
-    # certified heavy hitters, grid-blocked geo ops, k-core peeling,
-    # randomization inference, video scene cuts, Pareto classes, JSD drift
     "q_dedup_url",
     "q_text_rake",
     "q_agg_heavy_hitters",
@@ -260,9 +117,6 @@ LLM_SECONDARY = [
     "q_multimodal_scenecut",
     "q_agg_abc_pareto",
     "q_drift_jsd",
-    # continuation-r5 additions: rank-test suite member, JL projection,
-    # nearest-match as-of, stencil density, OHLC bars, release manifest,
-    # dense gap interpolation
     "q_stats_kruskal",
     "q_vec_jl_projection",
     "q_join_asof_nearest",
@@ -270,524 +124,175 @@ LLM_SECONDARY = [
     "q_agg_ohlc",
     "q_export_manifest",
     "q_ts_interpolate_linear",
-    # r11 addition: the real PNG encode→decode round trip (two
-    # mapInPandas stages over binary payloads)
     "q_multimodal_decode_real",
 ]
 
+SUITES = ("headline", "tpch", "llm")
 
-def time_suite(
-    spark, queries, names, sf_dir: str, repeats: int
-) -> dict[str, float]:
-    """min-of-N timings for a named query list (shared by the headline,
-    TPC-H, and LLM suites — one copy of the failure/clamp logic)."""
-    out: dict[str, float] = {}
+
+def time_key(spark, fn, sf_dir: str, repeats: int) -> float:
+    """Min-of-``repeats`` wall seconds to build ``fn``'s DataFrame and
+    write it to the noop sink."""
+    best = float("inf")
+    for _ in range(repeats):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 3)
+
+
+def time_suite(spark, queries, names, sf_dir: str, repeats: int) -> dict[str, float]:
+    """``time_key`` per name; a key that raises records -1.0 (the error
+    goes to stderr, so a failing key never breaks the JSON line)."""
+    out = {}
     for name in names:
-        fn = queries[name]
         try:
-            # min-of-N: single-shot timings on a shared host swing ±30%
-            # with background load; the min is the steady-state number
-            # the 100 TB story cares about and keeps round-over-round
-            # comparisons meaningful
-            best = None
-            for _ in range(repeats):
-                t0 = time.perf_counter()
-                n = fn(spark, sf_dir).count()
-                assert n >= 0
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-            out[name] = round(best, 3)
-        except Exception as exc:  # keep the JSON line intact for the driver
+            out[name] = time_key(spark, queries[name], sf_dir, repeats)
+        except Exception as exc:
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             out[name] = -1.0
     return out
 
 
-
-#: wait-until-idle gate (VERDICT r5 item 5): r5's driver-captured
-#: numbers carried a 5.66 pre-run loadavg from the preceding
-#: correctness drive and inflated the TPC-H tail 15-75%. Block until
-#: the 1-min loadavg drops below the threshold (bounded — never wait
-#: more than IDLE_MAX_WAIT_SEC), so captured numbers are
-#: contention-clean by construction rather than by luck.
-#:
-#: r7 tightening (VERDICT r6 item 4): BENCH_r06 was captured at
-#: loadavg 2.07 — the 2.0 gate opened AT its boundary and the captured
-#: median read ~5-10% pessimistic vs contention-clean runs. Gate at
-#: 1.5, and when the bounded wait expires above threshold, grant one
-#: extra settle cycle (a second bounded wait) before giving up — a
-#: decaying load that just missed the deadline usually clears in the
-#: next minute, and a truly-loaded host still exits in bounded time.
-IDLE_LOADAVG_MAX = 1.5
-IDLE_MAX_WAIT_SEC = 300
-IDLE_RETRY_CYCLES = 1
-
-
-#: Per-query outlier threshold (VERDICT r9 'What's wrong' #5): the
-#: judge's pytest-concurrent run produced median 0.94 / contended
-#: false while ONE query (q_dedup_exact) sat at 2.718× its anchor —
-#: a median-only verdict lets a single-query outlier slip through.
-#: Any query above this ratio is re-timed once; if it STAYS above
-#: after the retry, the run is flagged contended.
-OUTLIER_RATIO = 2.0
-
-#: Absolute-delta floor for the outlier RETRY/FLAG machinery (r11): a
-#: purely relative gate on sub-second anchors turns this VM's bursty
-#: fixed-overhead swings into 2-3x "outliers" (three consecutive r11
-#: closing runs flagged on 0.22-0.42 s-anchor llm keys while every
-#: median was clean; the cleanest case — q_drift_jsd, a 5x25-row
-#: micro-query whose wall time is pure scheduling/JIT overhead — read
-#: 0.42 s in the anchor window and 1.15-1.53 s in later idle windows
-#: with identical code, a ±0.7-1.1 s overhead swing). A query must
-#: exceed OUTLIER_RATIO x anchor AND run this many seconds over its
-#: anchor to trigger a retry or flag the run: only changes that
-#: matter at suite scale gate the verdict. Raw ratios are always
-#: recorded, so sub-second drift stays visible in the artifact; the
-#: median rule still catches uniform contention, and the 10x scaling
-#: probe (SCALING_PROBE_FULL) catches algorithmic blowups
-#: independently of wall-clock anchors. The floor applies only to
-#: anchors at or above SUBSECOND_ANCHOR_CUTOFF (VERDICT r12 item 4) —
-#: below it the floor's shadow is exactly where a real 3x regression
-#: on a small query hides, so small anchors gate on pure ratio
-#: instead (OUTLIER_RATIO_SMALL).
-OUTLIER_MIN_ABS_SEC = 1.0
-
-#: Anchors below this many seconds use the pure-ratio small-anchor
-#: rule; at or above it, the ratio+absolute-delta rule (VERDICT r12
-#: item 4: the judge's contended-false r12 run carried a 3.66x
-#: unflagged sub-second tail — q_ts_interpolate_linear 0.308 s anchor
-#: -> 1.128 s — because the 1.0 s floor shielded every anchor under
-#: ~1 s from the 2x gate and only the 5x backstop applied).
-SUBSECOND_ANCHOR_CUTOFF = 0.5
-
-#: Pure-ratio gate for sub-cutoff anchors. 2.5x sits above the
-#: honest per-query noise of a settled host (r12's three same-HEAD
-#: full runs spread +-7%) while catching the 2.7-3.7x drifts the r12
-#: run left invisible; a trip means ONE fresh min-of-N retry, and
-#: only persistence through both windows flags the run — transient
-#: fixed-overhead bursts (the r11 q_drift_jsd swings) are absorbed
-#: by the retry's min-fold, not by a blanket exemption anymore.
-OUTLIER_RATIO_SMALL = 2.5
-
-#: Pure-ratio backstop above the absolute-delta floor (ADVICE r11,
-#: tightened r12 from 5x per VERDICT r12 item 4): anything past this
-#: ratio flags REGARDLESS of absolute delta, closing the window for
-#: anchors in [cutoff, 1 s) where ratio 2-3x can ride under the
-#: 1.0 s floor. With the small-anchor rule at 2.5x this is mostly
-#: defense-in-depth; transient bursts still get the one-retry
-#: min-of-N before the flag sticks.
-OUTLIER_RATIO_BACKSTOP = 3.0
-
-
-def is_outlier(timing: float, anchor: float) -> bool:
-    """Anchor-scaled outlier gate (VERDICT r12 item 4): ratio above
-    the pure backstop always trips; sub-cutoff anchors trip on pure
-    ratio (OUTLIER_RATIO_SMALL — an absolute floor would be exactly
-    the shadow a real 3x small-query regression hides in); larger
-    anchors trip on ratio-above-gate AND delta-above-floor
-    (OUTLIER_MIN_ABS_SEC keeps suite-scale-irrelevant blips from
-    gating)."""
-    if timing <= 0:
-        return False
-    ratio = timing / anchor
-    if ratio > OUTLIER_RATIO_BACKSTOP:
-        return True
-    if anchor < SUBSECOND_ANCHOR_CUTOFF:
-        return ratio > OUTLIER_RATIO_SMALL
-    return ratio > OUTLIER_RATIO and timing - anchor > OUTLIER_MIN_ABS_SEC
-
-
-def contended_verdict(
-    median_ratio: float | None,
-    load_gate_open: float,
-    max_ratio: float | None = None,
-    sections: tuple[dict, ...] = (),
-) -> bool:
-    """Contention decision for load_check (VERDICT r7 #4): keys off the
-    PRE-Spark gate-open loadavg (a gate forced open by bounded-wait
-    expiry is contention by definition) and the anchor ratio (uniform
-    timing inflation across queries) — never the post-warm-up sample,
-    which the warm-up queries self-inflate. ``max_ratio`` is the
-    POST-RETRY per-query maximum (VERDICT r9 #5): a single query still
-    >OUTLIER_RATIO× its anchor after a fresh min-of-N flags the run
-    even when the median looks clean. ``sections`` (VERDICT r10 #1)
-    extends the same two rules to the tpch/llm section_check dicts, so
-    section-level drift — previously unguarded and silently inflatable
-    — flags the run through the artifact itself."""
-    if (median_ratio is not None and median_ratio > 1.5) or (
-        load_gate_open > IDLE_LOADAVG_MAX
-    ) or (max_ratio is not None and max_ratio > OUTLIER_RATIO):
-        return True
-    for sec in sections:
-        med = sec.get("median_ratio_vs_anchor")
-        # the FLOORED max (flag_max_ratio_vs_anchor) is the gating
-        # value; the raw max stays in the artifact for visibility but
-        # sub-second noise deltas must not flag the run (r11)
-        mx = sec.get("flag_max_ratio_vs_anchor")
-        if med is not None and med > 1.5:
-            return True
-        if mx is not None and mx > OUTLIER_RATIO:
-            return True
-    return False
-
-
-def retime_outliers(
-    timings: dict[str, float],
-    ratios: dict[str, float],
-    retime_one,
-    anchors: dict[str, float] | None = None,
-) -> tuple[dict[str, float], dict[str, float], dict[str, list[float]]]:
-    """Re-run once every query whose anchor ratio exceeds
-    OUTLIER_RATIO (VERDICT r9 #5). ``retime_one(name) -> float`` runs
-    a fresh min-of-N for that query alone. The reported timing is the
-    min of old and new (min-of-N semantics extend across the retry: a
-    transient burst inflates one window, not both); the returned
-    ``retries`` dict records {name: [original_sec, retry_sec]} so the
-    artifact shows the retry happened either way — and main() also
-    surfaces the RETRY measurement's own ratio in load_check
-    (post_retry_max_ratio_vs_anchor), because the min-fold is
-    one-sided (ADVICE r10): a genuinely regressed query that catches
-    one quiet retry window would otherwise have its slow measurement
-    silently discarded from the headline figure. (For the contended
-    VERDICT itself min-vs-fresh is provably equivalent at the
-    OUTLIER_RATIO boundary: the retry only fires when the original is
-    above it, so min(orig, fresh) clears the gate iff fresh does.)
-    ``anchors`` defaults to the headline set; the secondary suites
-    pass their own. Pure function of the timing callback —
-    unit-testable without a session."""
-    anchors = ANCHOR_SF01 if anchors is None else anchors
-    retries: dict[str, list[float]] = {}
-    for q in sorted(ratios):
-        if q in anchors and is_outlier(timings.get(q, -1), anchors[q]):
-            fresh = retime_one(q)
-            retries[q] = [timings[q], round(fresh, 3)]
-            if fresh > 0:
-                best = min(timings[q], fresh)
-                timings = {**timings, q: round(best, 3)}
-                ratios = {**ratios, q: round(best / anchors[q], 3)}
-    return timings, ratios, retries
-
-
-def anchored_ratios(
-    timings: dict[str, float], anchors: dict[str, float], sf: str
-) -> dict[str, float]:
-    """Per-query ratio vs anchor — only at the anchored scale (sf0.1)
-    and only for positive timings of anchored queries."""
-    if sf != "0.1":
-        return {}
+def deployment(spark) -> dict:
+    """What ``compare`` requires to match: the same fields as
+    perfbench's report. The loadavg samples are recorded, not gated on."""
+    sc = spark.sparkContext
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
     return {
-        q: round(timings[q] / anchors[q], 3)
-        for q in timings
-        if timings.get(q, -1) > 0 and q in anchors
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "driver_memory": spark.conf.get("spark.driver.memory"),
+        "cpus": len(os.sched_getaffinity(0)),
+        "mem_gb": round(mem_kb / 1024**2, 1),
+        "spark": spark.version,
     }
 
 
-def post_retry_max_ratio(
-    retries: dict[str, list[float]], anchors: dict[str, float]
-) -> float | None:
-    """Max of the RETRY measurements' own anchor ratios (ADVICE r10):
-    shown beside the min-folded ratios so a retry that 'rescued' a
-    slow original is visible in the artifact, not silently folded
-    away."""
-    vals = [
-        round(fresh / anchors[q], 3)
-        for q, (_orig, fresh) in retries.items()
-        if fresh > 0 and q in anchors
-    ]
-    return max(vals) if vals else None
+def compact_summary_line(*, total, timings, tpch_total, llm_total, deployment, sf) -> str:
+    """The single driver-contract stdout JSON line: headline per-key
+    seconds, the secondary suites as totals, compact separators."""
+    return json.dumps(
+        {
+            "metric": "headline_suite_total",
+            "value": total,
+            "unit": "sec",
+            "queries": timings,
+            "tpch_total_sec": tpch_total,
+            "llm_total_sec": llm_total,
+            "repeats": REPEATS,
+            "action": "noop",
+            "deployment": deployment,
+            "sf": sf,
+        },
+        separators=(",", ":"),
+    )
 
 
-def section_check(
-    ratios: dict[str, float], retries: dict[str, list[float]],
-    anchors: dict[str, float],
-) -> dict:
-    """Per-section self-adjudication summary (VERDICT r10 item 1): the
-    r10 driver snapshot carried a 40% tpch inflation that needed a
-    judge-side idle re-run to clear because the sections had no
-    anchors. median/max here follow the same contention logic as the
-    headline (uniform median inflation = host noise; a post-retry
-    single-query max = a real regression candidate)."""
-    med = round(statistics.median(ratios.values()), 3) if ratios else None
-    mx = round(max(ratios.values()), 3) if ratios else None
-    return {
-        "median_ratio_vs_anchor": med,
-        # raw max: always recorded for visibility
-        "max_ratio_vs_anchor": mx,
-        # floored max: the value the contended verdict gates on — only
-        # queries past BOTH the ratio gate and the absolute floor
-        # count (is_outlier)
-        "flag_max_ratio_vs_anchor": flagworthy_max(ratios, anchors),
-        "post_retry_max_ratio_vs_anchor": post_retry_max_ratio(
-            retries, anchors
-        ),
-        "outlier_retries": len(retries),
-    }
+def _identity(doc: dict) -> dict:
+    """A run's deployment without its loadavg samples, plus the scale
+    and the timed action: what two runs must share to compare."""
+    if "deployment" not in doc:
+        raise ValueError("no deployment block (a count()-era file?)")
+    dep = {k: v for k, v in doc["deployment"].items() if not k.startswith("loadavg")}
+    return {**dep, "sf": doc.get("sf"), "action": doc.get("action")}
 
 
-def flagworthy_max(
-    ratios: dict[str, float], anchors: dict[str, float]
-) -> float | None:
-    """Max ratio among queries that clear BOTH outlier gates (ratio +
-    absolute floor); None when no query does."""
-    vals = [
-        r
-        for q, r in ratios.items()
-        if q in anchors and is_outlier(r * anchors[q], anchors[q])
-    ]
-    return round(max(vals), 3) if vals else None
+def compare(parents: list[dict], change: dict) -> dict[str, float]:
+    """Keys of ``change`` (a BENCH_DETAIL.json document) slower than
+    REGRESSION_RATIO x their largest time over ``parents``, mapped to
+    that ratio; a key that fails only in ``change`` maps to inf. Keys
+    that failed in a parent have no baseline and are skipped. Raises
+    ValueError if the documents come from different deployments."""
+    want = _identity(change)
+    for doc in parents:
+        got = _identity(doc)
+        if got != want:
+            diff = sorted(k for k in want.keys() | got.keys() if want.get(k) != got.get(k))
+            raise ValueError(f"different deployments ({', '.join(diff)}): "
+                             "only same-host runs compare")
+    flagged = {}
+    for suite in SUITES:
+        for key, t in change[suite]["queries"].items():
+            base = [doc[suite]["queries"].get(key, -1.0) for doc in parents]
+            if min(base) <= 0:
+                continue
+            ratio = t / max(base) if t > 0 else float("inf")
+            if ratio > REGRESSION_RATIO:
+                flagged[key] = round(ratio, 3)
+    return flagged
 
 
-def wait_until_idle() -> float:
-    """Sleep until loadavg_1m < IDLE_LOADAVG_MAX or the bounded wait
-    expires (plus up to IDLE_RETRY_CYCLES extra bounded waits if the
-    gate would open contended); returns the loadavg observed when the
-    gate opened."""
-    for cycle in range(1 + IDLE_RETRY_CYCLES):
-        deadline = time.monotonic() + IDLE_MAX_WAIT_SEC
-        load = os.getloadavg()[0]
-        while load > IDLE_LOADAVG_MAX and time.monotonic() < deadline:
-            print(
-                f"bench: waiting for idle host (loadavg_1m {load:.2f} > "
-                f"{IDLE_LOADAVG_MAX}, cycle {cycle + 1})",
-                file=sys.stderr,
-            )
-            time.sleep(15)
-            load = os.getloadavg()[0]
-        if load <= IDLE_LOADAVG_MAX:
-            break
-    return load
-
-
-#: The driver's artifact keeps only the last ~2 KB of stdout; the final
-#: summary line must fit that window WHOLE or BENCH_r{N}.json records
-#: "parsed": null (this truncated r6-r8's artifacts). Budget below the
-#: 2000-char capture with margin for a stray warning line.
-SUMMARY_LINE_BUDGET = 1900
-
-
-def compact_summary_line(
-    *,
-    total: float,
-    timings: dict[str, float],
-    tpch_total: float,
-    llm_total: float,
-    ratios: dict[str, float],
-    load_check: dict,
-    sf,
-) -> str:
-    """Render the single driver-contract stdout JSON line, guaranteed
-    under SUMMARY_LINE_BUDGET: secondary suites appear as totals only,
-    separators are compact, and if the line still overruns (it cannot
-    at 18 headline queries, but a grown suite must degrade rather than
-    truncate) the per-query ratio echo is dropped first — the headline
-    figure and contention verdict always survive."""
-    payload = {
-        "metric": "headline_suite_total",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "tpch_total_sec": tpch_total,
-        "llm_total_sec": llm_total,
-        "ratio_vs_anchor": ratios,
-        "load_check": load_check,
-        "repeats": REPEATS,
-        "sf": sf,
-    }
-    line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > SUMMARY_LINE_BUDGET:
-        payload["ratio_vs_anchor"] = {
-            "dropped_for_size_median": load_check["median_ratio_vs_anchor"]
-        }
-        retries = load_check.get("outlier_retries")
-        if retries:
-            # keep the count (and the verdict already folded the
-            # post-retry max in) — full detail stays in BENCH_DETAIL
-            payload["load_check"] = {
-                **load_check,
-                "outlier_retries": {"dropped_for_size_count": len(retries)},
-            }
-        line = json.dumps(payload, separators=(",", ":"))
-    return line
+def compare_main(paths: list[str]) -> int:
+    if len(paths) < 2:
+        print("usage: bench.py compare PARENT.json [PARENT2.json ...] CHANGE.json",
+              file=sys.stderr)
+        return 2
+    docs = [json.loads(Path(p).read_text()) for p in paths]
+    try:
+        flagged = compare(docs[:-1], docs[-1])
+    except ValueError as exc:
+        print(f"bench compare: {exc}", file=sys.stderr)
+        return 2
+    for key, ratio in sorted(flagged.items(), key=lambda kv: -kv[1]):
+        print(f"{key}\t{ratio}x")
+    print(f"bench compare: {len(flagged)} key(s) over {REGRESSION_RATIO}x "
+          f"the largest of {len(docs) - 1} parent run(s)", file=sys.stderr)
+    return 1 if flagged else 0
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    load_gate_open = wait_until_idle()
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    load_start = os.getloadavg()[0]
     spark = build_session(app_name="spark-graft-bench")
-
     queries = registry.all_queries()
 
-    # Warm the JVM (codegen, JIT, buffer pools) at the smallest SF so the
-    # first timed query isn't billed one-time session warmup, and stage
-    # the events µs-copy for this SF (one-time pyarrow conversion).
-    # Steady-state throughput is what the 100 TB story cares about.
-    queries["q_flagship_pricing_summary"](spark, "/root/testdata/sf0.001").count()
-    # ... and the Python/Arrow worker pool (first pandas-UDF query otherwise
-    # pays worker fork + Arrow init, which is session setup, not throughput)
-    queries["q_sim_knn_blas"](spark, "/root/testdata/sf0.001").count()
-    from oke_cassandra_spark_locality_demo_spark.catalog import load as _load
-
-    # one-time per-table open costs (file listing, footer reads, events
-    # µs-staging) are setup, not steady-state throughput: touch each
-    # LLM-block table once before timing
+    # Session warm-up is setup, not throughput: JVM codegen and JIT
+    # (flagship), the Python/Arrow worker pool (knn), and each LLM
+    # table's one-time open costs (file listing, footers, the events
+    # µs-staging copy).
+    for q in ("q_flagship_pricing_summary", "q_sim_knn_blas"):
+        time_key(spark, queries[q], "/root/testdata/sf0.001", 1)
     for t in ("events", "documents", "embeddings"):
-        _load(spark, sf_dir, t).count()
+        load(spark, sf_dir, t).count()
 
-    # Sampled AFTER the JVM/Arrow warm-up queries, which themselves
-    # inflate 1-min loadavg — this reads self-inflicted load, NOT host
-    # contention. The contention signal is loadavg_gate_open (sampled
-    # when the idle gate opened, before any Spark work) plus
-    # median_ratio_vs_anchor (VERDICT r7 #4: r7 read 2.0 here despite
-    # a 0.94 gate-open, making the artifact alone ambiguous).
-    load_post_warmup = os.getloadavg()[0]
+    tpch = sorted((q for q in queries if q.startswith("q_tpch_q")),
+                  key=lambda s: int(s[len("q_tpch_q"):]))
+    detail: dict = {"action": "noop", "sf": sf}
+    for suite, names, repeats in (("headline", HEADLINE, REPEATS),
+                                  ("tpch", tpch, SECONDARY_REPEATS),
+                                  ("llm", LLM_SECONDARY, SECONDARY_REPEATS)):
+        timings = time_suite(spark, queries, names, sf_dir, repeats)
+        total = round(sum(t for t in timings.values() if t >= 0), 3)
+        detail[suite] = {"total_sec": total, "repeats": repeats, "queries": timings}
+    detail["deployment"] = dep = {**deployment(spark), "loadavg_1m_start": round(load_start, 2),
+                                  "loadavg_1m_end": round(os.getloadavg()[0], 2)}
 
-    timings = time_suite(spark, queries, HEADLINE, sf_dir, REPEATS)
-
-    # Per-query ratio vs the r1 anchor, then one retry for any query
-    # >OUTLIER_RATIO× its anchor (VERDICT r9 #5): a transient burst
-    # hitting one query's whole min-of-5 window gets a second window
-    # before it can either distort the suite total or hide behind a
-    # clean median.
-    ratios = anchored_ratios(timings, ANCHOR_SF01, sf)
-    timings, ratios, outlier_retries = retime_outliers(
-        timings,
-        ratios,
-        lambda q: time_suite(spark, queries, [q], sf_dir, REPEATS)[q],
-    )
-
-    total = round(sum(t for t in timings.values() if t >= 0), 3)
-
-    # Secondary suite: all 22 TPC-H queries (min-of-2 — a coarser probe
-    # than the headline's min-of-5; this is the classic-warehouse-shape
-    # throughput statement, reported alongside but never mixed into the
-    # anchored headline metric). Anchored + outlier-retried against
-    # the HEAD-baselined section anchors (VERDICT r10 item 1).
-    tpch_names = sorted(
-        (q for q in queries if q.startswith("q_tpch_q")),
-        key=lambda s: int(s[len("q_tpch_q"):]),
-    )
-    tpch_timings = time_suite(spark, queries, tpch_names, sf_dir, 2)
-    tpch_ratios = anchored_ratios(tpch_timings, ANCHOR_TPCH_SF01, sf)
-    tpch_timings, tpch_ratios, tpch_retries = retime_outliers(
-        tpch_timings, tpch_ratios,
-        lambda q: time_suite(spark, queries, [q], sf_dir, 2)[q],
-        anchors=ANCHOR_TPCH_SF01,
-    )
-    tpch_total = round(sum(t for t in tpch_timings.values() if t >= 0), 3)
-
-    # Secondary suite 2: the LLM-data-pipeline block — min-of-2,
-    # reported beside (never mixed into) the anchored headline metric.
-    llm_timings = time_suite(spark, queries, LLM_SECONDARY, sf_dir, 2)
-    llm_ratios = anchored_ratios(llm_timings, ANCHOR_LLM_SF01, sf)
-    llm_timings, llm_ratios, llm_retries = retime_outliers(
-        llm_timings, llm_ratios,
-        lambda q: time_suite(spark, queries, [q], sf_dir, 2)[q],
-        anchors=ANCHOR_LLM_SF01,
-    )
-    llm_total = round(sum(t for t in llm_timings.values() if t >= 0), 3)
-
-    # Median ratio >> 1 across ALL queries = host contention, not a
-    # code regression (that's how the r2 artifact was diagnosed); the
-    # post-retry max catches the single-query outlier the median hides
-    # (VERDICT r9 #5); the per-section checks extend both rules to the
-    # secondary suites (VERDICT r10 #1).
-    median_ratio = round(statistics.median(ratios.values()), 3) if ratios else None
-    max_ratio = round(max(ratios.values()), 3) if ratios else None
-    # verdict gates on the floored max (is_outlier); raw max recorded
-    flag_max = flagworthy_max(ratios, ANCHOR_SF01)
-    tpch_check = section_check(tpch_ratios, tpch_retries, ANCHOR_TPCH_SF01)
-    llm_check = section_check(llm_ratios, llm_retries, ANCHOR_LLM_SF01)
-    load_check = {
-        "loadavg_gate_open": round(load_gate_open, 2),
-        "loadavg_post_warmup": round(load_post_warmup, 2),
-        "median_ratio_vs_anchor": median_ratio,
-        "max_ratio_vs_anchor": max_ratio,
-        "flag_max_ratio_vs_anchor": flag_max,
-        "post_retry_max_ratio_vs_anchor": post_retry_max_ratio(
-            outlier_retries, ANCHOR_SF01
-        ),
-        "outlier_retries": outlier_retries,
-        "sections": {"tpch": tpch_check, "llm": llm_check},
-        "contended": contended_verdict(
-            median_ratio, load_gate_open, flag_max,
-            sections=(tpch_check, llm_check),
-        ),
-    }
-    if load_check["contended"]:
-        print(
-            f"bench: WARNING contended run (gate-open loadavg "
-            f"{load_gate_open:.1f}, median anchor ratio {median_ratio}, "
-            f"post-retry max {max_ratio}) — numbers unreliable",
-            file=sys.stderr,
-        )
-    # Verbose per-query detail for the secondary suites goes to STDERR
-    # and to BENCH_DETAIL.json beside this script: the driver's
-    # artifact keeps only the last ~2 KB of STDOUT, and r6-r8's single
-    # fat JSON line outgrew that window, truncating the artifact
-    # mid-line and leaving BENCH_r{N}.json "parsed": null (VERDICT r8
-    # "What's wrong" #4). Humans and local runs still get the full
-    # breakdown (the round's validation-run copy is committed, keeping
-    # per-query TPC-H/LLM cross-round comparisons possible); the
-    # driver-parsed stdout line stays compact.
-    detail = {
-        "headline": {"total_sec": total, "queries": timings},
-        "tpch": {
-            "total_sec": tpch_total,
-            "queries": tpch_timings,
-            "ratio_vs_anchor": tpch_ratios,
-            "outlier_retries": tpch_retries,
-        },
-        "llm": {
-            "total_sec": llm_total,
-            "queries": llm_timings,
-            "ratio_vs_anchor": llm_ratios,
-            "outlier_retries": llm_retries,
-        },
-        "ratio_vs_anchor": ratios,
-        "load_check": load_check,
-        "repeats": REPEATS,
-        # ratio denominators: r1-code re-measured at r6 as the
-        # per-query median of 3 idle-host min-of-5 runs — the
-        # expected value of the same measurement the numerators
-        # are (ADVICE r5). Ratios in r1-r5 artifacts used the
-        # old min-of-2 anchor (~1.18× looser) and are not
-        # comparable to r6+.
-        "anchor_methodology": "headline: r1-tree@14236e2, idle host, "
-        "median of 3 runs x min-of-5, re-baselined r6; sections: "
-        "HEAD-r13 tree, idle host, median of 3 runs x min-of-2 "
-        "(drift anchors, not progress anchors — see ANCHOR_TPCH_SF01)",
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-    }
+    # Full detail goes to stderr and BENCH_DETAIL.json; the driver
+    # parses only the last ~2 KB of stdout.
     print("bench-detail: " + json.dumps(detail), file=sys.stderr)
+    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     try:
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1)
             f.write("\n")
     except OSError as exc:  # read-only checkout must not fail the bench
-        print(f"bench: could not write BENCH_DETAIL.json: {exc}",
-              file=sys.stderr)
-    # The ONE stdout JSON line (driver contract): compact separators and
-    # secondary suites collapsed to totals keep it ~1.3 KB — the whole
-    # line survives a 2 KB tail capture with margin, so the headline
-    # figure, per-query seconds, anchor ratios, and the contention
-    # verdict are all recoverable from the artifact alone.
-    print(
-        compact_summary_line(
-            total=total,
-            timings=timings,
-            tpch_total=tpch_total,
-            llm_total=llm_total,
-            ratios=ratios,
-            load_check=load_check,
-            sf=float(sf) if sf.replace(".", "").isdigit() else sf,
-        )
-    )
+        print(f"bench: could not write BENCH_DETAIL.json: {exc}", file=sys.stderr)
+    print(compact_summary_line(
+        total=detail["headline"]["total_sec"],
+        timings=detail["headline"]["queries"],
+        tpch_total=detail["tpch"]["total_sec"],
+        llm_total=detail["llm"]["total_sec"],
+        deployment=dep,
+        sf=sf,
+    ))
     spark.stop()
 
 
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["compare"]:
+        sys.exit(compare_main(sys.argv[2:]))
     main()

@@ -43,11 +43,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..registry import register
-
-
-def _dec(c: Column | str, scale: int = 8) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return c.cast(f"decimal(28,{scale})")
+from .aggregates import _dec
 
 
 def _money(c: Column, alias: str) -> Column:

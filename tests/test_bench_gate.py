@@ -1,381 +1,185 @@
-"""Unit coverage for bench.py's wait-until-idle gate (VERDICT r6 #4):
-the capture must not start while the 1-min loadavg sits above the
-threshold, and a decaying load that misses the first bounded wait gets
-exactly one extra settle cycle — never an unbounded spin."""
+"""bench.py: the noop-write timing helper, the deployment block, the
+same-host ``compare`` and the size of the driver's stdout line."""
 
 from __future__ import annotations
 
+import json
+import os
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
 import bench
 
-
-def _run_gate(monkeypatch, loads: list[float]) -> tuple[float, int]:
-    """Drive wait_until_idle against a scripted loadavg sequence (the
-    last value repeats); returns (gate-open loadavg, sleeps taken)."""
-    seq = iter(loads)
-    last = loads[-1]
-    state = {"sleeps": 0, "now": 0.0}
-
-    def fake_loadavg():
-        return (next(seq, last), 0.0, 0.0)
-
-    def fake_sleep(s):
-        state["sleeps"] += 1
-        state["now"] += s
-
-    monkeypatch.setattr(bench.os, "getloadavg", fake_loadavg)
-    monkeypatch.setattr(bench.time, "sleep", fake_sleep)
-    monkeypatch.setattr(bench.time, "monotonic", lambda: state["now"])
-    return bench.wait_until_idle(), state["sleeps"]
+DEPLOYMENT = {
+    "master": "local[4]",
+    "default_parallelism": 4,
+    "driver_memory": "7680m",
+    "cpus": 4,
+    "mem_gb": 15.0,
+    "spark": "4.0.0",
+    "loadavg_1m_start": 0.5,
+    "loadavg_1m_end": 3.1,
+}
+TPCH = [f"q_tpch_q{i}" for i in range(1, 23)]
 
 
-def test_gate_opens_immediately_when_idle(monkeypatch):
-    load, sleeps = _run_gate(monkeypatch, [0.8])
-    assert load == 0.8 and sleeps == 0
+def _doc(headline, tpch=None, llm=None, **deployment) -> dict:
+    """A BENCH_DETAIL.json document as bench.main writes it."""
+    return {
+        "action": "noop",
+        "sf": 0.1,
+        "headline": {"queries": headline},
+        "tpch": {"queries": tpch or {}},
+        "llm": {"queries": llm or {}},
+        "deployment": {**DEPLOYMENT, **deployment},
+    }
 
 
-def test_gate_threshold_is_tightened(monkeypatch):
-    """r6's capture opened at loadavg 2.07 under the old 2.0 gate; the
-    r7 threshold must hold the run until the load clears 1.5."""
-    assert bench.IDLE_LOADAVG_MAX == 1.5
-    load, sleeps = _run_gate(monkeypatch, [2.07, 1.9, 1.6, 1.4])
-    assert load == 1.4 and sleeps == 3
+def _base(keys, seed=0) -> dict[str, float]:
+    rng = random.Random(seed)
+    return {k: round(rng.uniform(0.15, 3.0), 3) for k in keys}
 
 
-def test_gate_grants_one_extra_settle_cycle(monkeypatch):
-    """A load still above threshold when the first bounded wait expires
-    gets a second bounded wait (IDLE_RETRY_CYCLES=1) — a decaying load
-    that clears in that window yields a clean capture."""
-    # first cycle: 20 sleeps x 15 s exhaust the 300 s budget while the
-    # load decays but stays > 1.5; the retry cycle then sees it clear.
-    loads = [5.0] + [5.0 - 0.1 * i for i in range(20)] + [1.2]
-    load, sleeps = _run_gate(monkeypatch, loads)
-    assert load == 1.2, load
+def _scaled(times, factor, noise=0.0, seed=1) -> dict[str, float]:
+    rng = random.Random(seed)
+    return {k: round(t * factor * (1 + rng.uniform(-noise, noise)), 3)
+            for k, t in times.items()}
 
 
-def test_gate_is_bounded_under_sustained_load(monkeypatch):
-    """A genuinely loaded host exits after 1 + IDLE_RETRY_CYCLES
-    bounded waits — the gate must never spin forever."""
-    load, sleeps = _run_gate(monkeypatch, [9.9])
-    max_sleeps_per_cycle = bench.IDLE_MAX_WAIT_SEC / 15
-    assert load == 9.9
-    assert sleeps <= (1 + bench.IDLE_RETRY_CYCLES) * (max_sleeps_per_cycle + 1)
+def test_time_suite_materializes_every_column(spark):
+    """The only column raises in a Python UDF. ``count()`` prunes it
+    and succeeds; the noop write computes it, so the key fails."""
+    boom = F.udf(lambda x: x // 0, "long")
+
+    def q_boom(spark, sf_dir):
+        return spark.range(10).select(boom("id").alias("x"))
+
+    def q_ok(spark, sf_dir):
+        return spark.range(10).select((F.col("id") * 2).alias("x"))
+
+    assert q_boom(spark, None).count() == 10
+    out = bench.time_suite(spark, {"q_boom": q_boom, "q_ok": q_ok},
+                           ["q_boom", "q_ok"], "unused", 2)
+    assert out["q_boom"] == -1.0
+    assert out["q_ok"] > 0
 
 
-def test_contended_verdict_keys_off_gate_open_load():
-    """VERDICT r7 #4: the contended verdict must read the GATE-OPEN
-    loadavg (pre-Spark) and the anchor ratio — never the post-warm-up
-    sample, which the warm-up queries self-inflate. Exercises the
-    function bench.main builds load_check with."""
-    contended = bench.contended_verdict
-
-    # r7's real readings: gate opened at 0.94, post-warm-up read 2.0 —
-    # the verdict must be CLEAN regardless of the post-warm-up value
-    assert contended(0.972, 0.94) is False
-    # a gate forced open by bounded-wait expiry IS contention
-    assert contended(0.9, 5.0) is True
-    # uniform timing inflation flags contention even with a clean gate
-    assert contended(1.8, 0.5) is True
-    # no anchor ratios available (non-sf0.1 run): gate load decides
-    assert contended(None, 0.5) is False
-    assert contended(None, 2.2) is True
+def test_deployment_records_the_host(spark):
+    dep = bench.deployment(spark)
+    assert dep["master"] == spark.sparkContext.master
+    assert dep["default_parallelism"] == spark.sparkContext.defaultParallelism
+    assert dep["cpus"] == len(os.sched_getaffinity(0))
+    assert dep["driver_memory"] and dep["mem_gb"] > 0
+    assert dep["spark"] == spark.version
 
 
-def test_contended_verdict_flags_single_query_outlier():
-    """VERDICT r9 #5: the judge's concurrent run read median 0.94 /
-    contended false while ONE query sat at 2.718× its anchor. The
-    post-retry max ratio must flag exactly that shape — and a clean
-    max must not."""
-    contended = bench.contended_verdict
-
-    # the r9 shape: clean gate, clean median, one persistent outlier
-    assert contended(0.94, 0.5, 2.718) is True
-    # same run with the outlier resolved by the retry
-    assert contended(0.94, 0.5, 1.2) is False
-    # boundary: exactly OUTLIER_RATIO is not an outlier
-    assert contended(0.94, 0.5, bench.OUTLIER_RATIO) is False
-    # max omitted (non-sf0.1 run) keeps the old two-signal behavior
-    assert contended(0.94, 0.5) is False
+def test_compare_flags_one_key_slowdown():
+    """A/B/A: a 1.8x slowdown on any single key flags that key alone,
+    with both parents carrying +-10% noise."""
+    base = _base(bench.HEADLINE)
+    a1, a2 = _scaled(base, 1.0, 0.1, seed=2), _scaled(base, 1.0, 0.1, seed=3)
+    for key in bench.HEADLINE:
+        change = _scaled(base, 1.0, 0.1, seed=4)
+        change[key] = round(base[key] * 1.8, 3)
+        flagged = bench.compare([_doc(a1), _doc(a2)], _doc(change))
+        assert set(flagged) == {key}, (key, flagged)
+        assert flagged[key] > bench.REGRESSION_RATIO
 
 
-def test_retime_outliers_reruns_only_outliers_and_keeps_min():
-    """Outlier retry semantics: only queries >OUTLIER_RATIO× anchor
-    are re-timed, the reported timing is min(old, retry), the ratio is
-    recomputed from it, and the retry is recorded even when the
-    original stands."""
-    anchor = bench.ANCHOR_SF01
-    q_out = "q_dedup_ngram_jaccard"  # anchor 1.246: 2.718x clears the
-    q_ok = "q_agg_hash"              # 0.5 s absolute floor too (r11)
-    timings = {q_out: round(anchor[q_out] * 2.718, 3),
-               q_ok: round(anchor[q_ok] * 0.95, 3)}
-    ratios = {q: round(timings[q] / anchor[q], 3) for q in timings}
-    calls = []
+def test_compare_flags_uniform_slowdown():
+    base = _base(bench.HEADLINE)
+    parents = [_doc(_scaled(base, 1.0, 0.02, seed=s)) for s in (2, 3)]
+    flagged = bench.compare(parents, _doc(_scaled(base, 1.6)))
+    assert set(flagged) == set(bench.HEADLINE)
 
-    def retime_one(name):
-        calls.append(name)
-        return round(anchor[name] * 0.99, 3)  # retry lands clean
 
-    new_t, new_r, retries = bench.retime_outliers(timings, ratios, retime_one)
-    assert calls == [q_out]                       # non-outlier untouched
-    assert new_t[q_ok] == timings[q_ok]
-    fresh = round(anchor[q_out] * 0.99, 3)
-    assert new_t[q_out] == fresh
-    assert new_r[q_out] == round(fresh / anchor[q_out], 3)
-    assert retries == {q_out: [timings[q_out], round(anchor[q_out] * 0.99, 3)]}
+def test_compare_ignores_noise_on_every_key():
+    base = _base(bench.HEADLINE)
+    # the worst case of +-15%: the parents all 15% fast, the change all
+    # 15% slow
+    assert bench.compare([_doc(_scaled(base, 0.85))], _doc(_scaled(base, 1.15))) == {}
+    for seed in range(20):
+        parents = [_doc(_scaled(base, 1.0, 0.15, seed=seed + s)) for s in (100, 200)]
+        change = _doc(_scaled(base, 1.0, 0.15, seed=seed + 300))
+        assert bench.compare(parents, change) == {}
 
-    # retry slower than the original: min keeps the original, and the
-    # still-high ratio now feeds the contended verdict
-    def retime_worse(name):
-        return round(anchor[name] * 3.0, 3)
 
-    t2, r2, rt2 = bench.retime_outliers(timings, ratios, retime_worse)
-    assert t2[q_out] == timings[q_out]
-    assert r2[q_out] == ratios[q_out] == 2.718
-    assert bench.contended_verdict(0.94, 0.5, max(r2.values())) is True
-    assert rt2[q_out][0] == timings[q_out]
+def test_compare_covers_every_suite():
+    head, tpch = _base(bench.HEADLINE), _base(TPCH, seed=5)
+    llm = _base(bench.LLM_SECONDARY, seed=6)
+    parent = _doc(head, dict(tpch), dict(llm))
+    slow_tpch = {**tpch, "q_tpch_q5": tpch["q_tpch_q5"] * 2}
+    broken_llm = {**llm, "q_graph_kcore": -1.0}
+    assert bench.compare([parent], _doc(head, slow_tpch, broken_llm)) == {
+        "q_tpch_q5": 2.0, "q_graph_kcore": float("inf"),
+    }
+    # a key that failed in a parent has no baseline
+    parent_broken = _doc(head, tpch, broken_llm)
+    slow_llm = {**llm, "q_graph_kcore": 99.0}
+    assert bench.compare([parent, parent_broken], _doc(head, tpch, slow_llm)) == {}
 
-    # failed retry (-1.0 from time_suite's failure clamp) must not
-    # replace a valid original timing
-    t3, r3, rt3 = bench.retime_outliers(timings, ratios, lambda n: -1.0)
-    assert t3[q_out] == timings[q_out] and r3[q_out] == ratios[q_out]
-    assert rt3[q_out] == [timings[q_out], -1.0]
+
+@pytest.mark.parametrize("field,value", [("cpus", 32), ("master", "local[32]")])
+def test_compare_refuses_other_deployments(field, value):
+    base = _base(bench.HEADLINE)
+    with pytest.raises(ValueError, match=field):
+        bench.compare([_doc(base)], _doc(base, **{field: value}))
+    with pytest.raises(ValueError, match=field):
+        bench.compare([_doc(base), _doc(base, **{field: value})], _doc(base))
+    # loadavg is recorded, not compared
+    assert bench.compare([_doc(base, loadavg_1m_start=9.0)], _doc(base)) == {}
+
+
+def test_compare_cli_exit_codes(tmp_path, capsys):
+    base = _base(bench.HEADLINE)
+    paths = {}
+    for name, doc in {
+        "a": _doc(base),
+        "b": _doc({**base, "q_agg_hash": base["q_agg_hash"] * 1.8}),
+        "c": _doc(base, cpus=32),
+        "old": {"headline": {"queries": base}},
+    }.items():
+        paths[name] = str(tmp_path / f"{name}.json")
+        with open(paths[name], "w") as f:
+            json.dump(doc, f)
+    assert bench.compare_main([paths["a"], paths["b"], paths["a"]]) == 0
+    assert bench.compare_main([paths["a"], paths["a"], paths["b"]]) == 1
+    assert capsys.readouterr().out.startswith("q_agg_hash\t1.8x")
+    assert bench.compare_main([paths["a"], paths["c"]]) == 2
+    assert bench.compare_main([paths["old"], paths["a"]]) == 2
+    assert bench.compare_main([paths["a"]]) == 2
 
 
 def test_summary_line_fits_tail_capture_with_real_shapes():
-    """VERDICT r8 'What's wrong' #4: the driver keeps only the last
-    ~2 KB of bench stdout, and r6-r8's fat single line truncated
-    mid-JSON ("parsed": null). The compact final line must fit the
-    window whole at the real headline-suite shape — build it with
-    every HEADLINE query timed and ratio'd at worst-case widths."""
-    import json
-
-    timings = {q: 123.456 for q in bench.HEADLINE}
-    ratios = {q: 12.345 for q in bench.HEADLINE}
-    line = bench.compact_summary_line(
-        total=12345.678,
-        timings=timings,
-        tpch_total=12345.678,
-        llm_total=12345.678,
-        ratios=ratios,
-        load_check={
-            "loadavg_gate_open": 10.55,
-            "loadavg_post_warmup": 10.55,
-            "median_ratio_vs_anchor": 12.345,
-            "max_ratio_vs_anchor": 12.345,
-            # worst realistic width: several queries retried
-            "outlier_retries": {q: [123.456, 123.456]
-                                for q in bench.HEADLINE[:4]},
-            "contended": False,
-        },
-        sf=0.1,
-    )
-    assert len(line) <= bench.SUMMARY_LINE_BUDGET, len(line)
-    parsed = json.loads(line)
-    assert parsed["metric"] == "headline_suite_total"
-    assert set(parsed["queries"]) == set(bench.HEADLINE)
-    assert "ratio_vs_anchor" in parsed and "load_check" in parsed
-
-
-def test_summary_line_degrades_rather_than_overruns():
-    """If the suite ever grows past the budget, the ratio echo drops
-    (keeping the median inside load_check) — the line never exceeds
-    the capture window and the headline figure always survives."""
-    import json
-
-    many = {f"q_padded_query_name_{i:03d}": 123.456 for i in range(60)}
-    line = bench.compact_summary_line(
-        total=1.0,
-        timings=many,
-        tpch_total=1.0,
-        llm_total=1.0,
-        ratios=dict(many),
-        load_check={
-            "loadavg_gate_open": 1.0,
-            "loadavg_post_warmup": 1.0,
-            "median_ratio_vs_anchor": 0.987,
-            "max_ratio_vs_anchor": 0.999,
-            # pathological width: every padded query retried — the
-            # degrade path must collapse this to a count
-            "outlier_retries": {q: [123.456, 123.456] for q in many},
-            "contended": False,
-        },
-        sf=0.1,
-    )
-    parsed = json.loads(line)
-    assert parsed["ratio_vs_anchor"] == {"dropped_for_size_median": 0.987}
-    assert parsed["load_check"]["outlier_retries"] == {
-        "dropped_for_size_count": 60
+    """The driver keeps only the last ~2 KB of stdout: the summary line
+    must fit whole at the headline's shape, at realistic and at
+    worst-case widths."""
+    worst = {
+        "master": "local[1024]",
+        "default_parallelism": 1024,
+        "driver_memory": "24576m",
+        "cpus": 1024,
+        "mem_gb": 1024.5,
+        "spark": "4.0.0-preview2",
+        "loadavg_1m_start": 1024.55,
+        "loadavg_1m_end": 1024.55,
     }
-    assert parsed["load_check"]["max_ratio_vs_anchor"] == 0.999
-    assert parsed["value"] == 1.0
-
-
-_SAME_AS_RAW = object()
-
-
-def _mk_section(med, mx, flag_mx=_SAME_AS_RAW):
-    # flag_mx defaults to mx: in real section_check output the floored
-    # flag value equals the raw max whenever the outliers are
-    # floor-clearing (the shapes these tests model); pass None
-    # explicitly for the sub-floor-noise shape
-    return {"median_ratio_vs_anchor": med, "max_ratio_vs_anchor": mx,
-            "flag_max_ratio_vs_anchor": mx if flag_mx is _SAME_AS_RAW else flag_mx,
-            "post_retry_max_ratio_vs_anchor": None, "outlier_retries": 0}
-
-
-def test_contended_verdict_folds_section_checks():
-    """VERDICT r10 #1: the r10 driver snapshot's 40% un-anchored tpch
-    inflation needed a judge re-run to adjudicate. With section
-    anchors, the same two rules (median > 1.5 = uniform contention;
-    post-retry max > OUTLIER_RATIO = persistent outlier) apply to each
-    section, so the artifact self-adjudicates."""
-    contended = bench.contended_verdict
-
-    # clean headline, clean sections
-    assert contended(0.95, 0.5, 1.1,
-                     sections=(_mk_section(1.0, 1.2), _mk_section(0.9, 1.1))) is False
-    # the r10 shape: clean headline but a section median inflated
-    assert contended(0.95, 0.5, 1.1,
-                     sections=(_mk_section(1.52, 1.9), _mk_section(0.9, 1.1))) is True
-    # one section query persistently past the outlier gate
-    assert contended(0.95, 0.5, 1.1,
-                     sections=(_mk_section(1.0, 2.4),)) is True
-    # unanchored section (None medians, e.g. non-sf0.1 run) never flags
-    assert contended(0.95, 0.5, 1.1,
-                     sections=(_mk_section(None, None),)) is False
-    # a raw max past the gate whose delta sat UNDER the absolute floor
-    # (flag_max None) must not flag — sub-second noise, r11
-    assert contended(0.95, 0.5, 1.1,
-                     sections=(_mk_section(1.0, 2.6, flag_mx=None),
-                               )) is False
-    # no sections passed: behavior identical to the r9 form
-    assert contended(0.95, 0.5, 1.1) is False
-
-
-def test_retime_outliers_honors_custom_anchors():
-    anchors = {"q_tpch_q16": 1.0, "q_tpch_q1": 2.0}
-    timings = {"q_tpch_q16": 2.5, "q_tpch_q1": 1.9}
-    ratios = {q: round(timings[q] / anchors[q], 3) for q in timings}
-    calls = []
-
-    def retime_one(name):
-        calls.append(name)
-        return 0.9
-
-    t, r, retries = bench.retime_outliers(
-        timings, ratios, retime_one, anchors=anchors
-    )
-    assert calls == ["q_tpch_q16"]
-    assert t["q_tpch_q16"] == 0.9 and r["q_tpch_q16"] == 0.9
-    assert retries == {"q_tpch_q16": [2.5, 0.9]}
-
-
-def test_post_retry_ratio_surfaces_one_sided_fold():
-    """ADVICE r10: the min-fold can discard a slow original when the
-    retry lands in a quiet window — the retry measurement's own ratio
-    must therefore be surfaced, not just the folded min."""
-    anchors = {"qa": 1.0}
-    # original 2.7x, retry clean at 1.8x: folded ratio is 1.8 (min),
-    # and post_retry_max_ratio reports the retry's own 1.8
-    assert bench.post_retry_max_ratio({"qa": [2.7, 1.8]}, anchors) == 1.8
-    # failed retry (-1 clamp) contributes nothing
-    assert bench.post_retry_max_ratio({"qa": [2.7, -1.0]}, anchors) is None
-    assert bench.post_retry_max_ratio({}, anchors) is None
-
-
-def test_section_check_shape():
-    ratios = {"a": 0.9, "b": 1.1, "c": 2.6}
-    retries = {"c": [2.6, 2.5]}
-    chk = bench.section_check(ratios, retries, {"a": 1, "b": 1, "c": 1})
-    assert chk["median_ratio_vs_anchor"] == 1.1
-    assert chk["max_ratio_vs_anchor"] == 2.6
-    assert chk["post_retry_max_ratio_vs_anchor"] == 2.5
-    assert chk["outlier_retries"] == 1
-    empty = bench.section_check({}, {}, {})
-    assert empty["median_ratio_vs_anchor"] is None
-    assert empty["max_ratio_vs_anchor"] is None
-
-
-def test_anchored_ratios_only_at_anchored_scale():
-    anchors = {"qa": 2.0}
-    assert bench.anchored_ratios({"qa": 1.0}, anchors, "0.1") == {"qa": 0.5}
-    assert bench.anchored_ratios({"qa": 1.0}, anchors, "0.01") == {}
-    assert bench.anchored_ratios({"qa": -1.0}, anchors, "0.1") == {}
-    assert bench.anchored_ratios({"qb": 1.0}, anchors, "0.1") == {}
-
-
-def test_summary_line_fits_with_section_checks():
-    """The summary line gained load_check.sections (two section_check
-    dicts) — re-assert the 2 KB tail-capture budget at worst-case
-    numeric widths."""
-    import json
-
-    timings = {q: 123.456 for q in bench.HEADLINE}
-    ratios = {q: 12.345 for q in bench.HEADLINE}
-    sec = {"median_ratio_vs_anchor": 12.345, "max_ratio_vs_anchor": 12.345,
-           "post_retry_max_ratio_vs_anchor": 12.345, "outlier_retries": 22}
-    line = bench.compact_summary_line(
-        total=12345.678,
-        timings=timings,
-        tpch_total=12345.678,
-        llm_total=12345.678,
-        ratios=ratios,
-        load_check={
-            "loadavg_gate_open": 10.55,
-            "loadavg_post_warmup": 10.55,
-            "median_ratio_vs_anchor": 12.345,
-            "max_ratio_vs_anchor": 12.345,
-            "post_retry_max_ratio_vs_anchor": 12.345,
-            "outlier_retries": {q: [123.456, 123.456]
-                                for q in bench.HEADLINE[:4]},
-            "sections": {"tpch": dict(sec), "llm": dict(sec)},
-            "contended": False,
-        },
-        sf=0.1,
-    )
-    assert len(line) <= bench.SUMMARY_LINE_BUDGET, len(line)
-    parsed = json.loads(line)
-    assert parsed["load_check"]["sections"]["tpch"]["outlier_retries"] == 22
-
-
-def test_outlier_gate_is_anchor_scaled():
-    """VERDICT r12 item 4: the r11-era blanket 1.0 s floor let a
-    3.66x sub-second regression ride unflagged through the judge's
-    contended-false run. The gate is now anchor-scaled: pure ratio
-    (>2.5) below SUBSECOND_ANCHOR_CUTOFF, ratio+floor at or above it,
-    3x pure backstop everywhere. A trip means one fresh min-of-N
-    retry — only persistence through both windows flags the run."""
-    # the judge's exact unflagged r12 shape: 0.308 s anchor -> 1.128 s
-    # (3.66x) MUST now trip (the 'Done =' criterion of item 4)
-    assert bench.is_outlier(1.128, 0.308) is True
-    # a clean 3x synthetic sub-second regression trips too
-    assert bench.is_outlier(0.90, 0.30) is True         # 3.0x on 0.3 s anchor
-    assert bench.is_outlier(3.387, 1.246) is True       # big-query 2.7x, over floor
-    assert bench.is_outlier(0.70, 0.283) is False       # r11 ohlc blip: 2.47x, under
-    assert bench.is_outlier(0.674, 0.248) is True       # r9's 2.72x shape: retries now
-    assert bench.is_outlier(-1.0, 0.3) is False         # failure clamp
-    # cutoff boundary: at/above 0.5 s the floor still suppresses
-    # suite-scale-irrelevant blips (2.2x on a 0.5 s anchor = 0.6 s
-    # delta, under the 1.0 s floor)
-    assert bench.is_outlier(1.10, 0.50) is False
-    assert bench.is_outlier(1.24, 0.50) is False        # 2.48x, delta 0.74
-    # r12 backstop at 3x: anchors in [cutoff, 1 s) can no longer ride
-    # ratio ~3-5x under the absolute floor
-    assert bench.is_outlier(1.80, 0.55) is True         # 3.27x, delta 0.8 < 1.0
-    assert bench.is_outlier(12.0, 2.0) is True          # backstop on big too
-
-    # flagworthy_max: only floor-clearing outliers gate the verdict
-    anchors = {"small": 0.28, "big": 1.2}
-    ratios = {"small": 2.5, "big": 2.5}
-    assert bench.flagworthy_max(ratios, anchors) == 2.5
-    assert bench.flagworthy_max({"small": 2.5}, anchors) is None
-    assert bench.flagworthy_max({}, anchors) is None
-
-    # retime_outliers respects the small-anchor ratio boundary: a
-    # query at exactly 2.5x its sub-cutoff anchor is not re-timed
-    timings = {"small": 0.70, "big": 3.0}
-    calls = []
-    t, r, retries = bench.retime_outliers(
-        timings, dict(ratios), lambda q: calls.append(q) or 1.0,
-        anchors=anchors,
-    )
-    assert calls == ["big"] and "small" not in retries
+    for width, total, dep in ((123.456, 12345.678, DEPLOYMENT),
+                              (99999.999, 999999.999, worst)):
+        line = bench.compact_summary_line(
+            total=total,
+            timings={q: width for q in bench.HEADLINE},
+            tpch_total=total,
+            llm_total=total,
+            deployment=dep,
+            sf=0.001,
+        )
+        assert len(line) <= bench.SUMMARY_LINE_BUDGET, len(line)
+        parsed = json.loads(line)
+        assert parsed["metric"] == "headline_suite_total"
+        assert parsed["unit"] == "sec" and parsed["value"] == total
+        assert set(parsed["queries"]) == set(bench.HEADLINE)
+        assert parsed["action"] == "noop" and parsed["deployment"] == dep
+        assert parsed["sf"] == 0.001

@@ -3,10 +3,10 @@
 (VERDICT r13 item 7): each key runs ONCE in a FRESH SparkSession, so
 none of the (appId, sf_dir, corpus-fingerprint)-keyed family memos
 (_prefix_k density, shingle/candidate/docarray slots) can carry state
-between the measurement and anything before it. This is a builder-side
-sidecar — the bench contract (min-of-N, warm session) is unchanged; the
-point is to put the warm/cold ratio on record so speedup claims can
-separate plan wins from memo wins.
+between the measurement and anything before it. Each timing is one
+bench.time_key noop write. The bench contract (min-of-N, warm session)
+is unchanged; the point is to put the warm/cold ratio on record so
+speedup claims can separate plan wins from memo wins.
 
 Usage:
     python tools/cold_family_runs.py [key ...]   # default: the family
@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
@@ -32,6 +31,7 @@ FAMILY = [
 def main() -> None:
     names = sys.argv[1:] or FAMILY
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from bench import time_key
     from oke_cassandra_spark_locality_demo_spark import registry
     from oke_cassandra_spark_locality_demo_spark.session import build_session
 
@@ -40,17 +40,12 @@ def main() -> None:
         # session warmup only (JVM/codegen/table open) — runs at a
         # DIFFERENT sf_dir, so corpus-fingerprint-keyed memos for the
         # measured scale stay cold
-        registry.all_queries()["q_dedup_exact"](
-            spark, "/root/testdata/sf0.001"
-        ).count()
-        fn = registry.all_queries()[name]
+        queries = registry.all_queries()
+        time_key(spark, queries["q_dedup_exact"], "/root/testdata/sf0.001", 1)
+        fn = queries[name]
         spark.sparkContext.setJobDescription(f"cold {name}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        cold = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        warm = time.perf_counter() - t0
+        cold = time_key(spark, fn, sf_dir, 1)
+        warm = time_key(spark, fn, sf_dir, 1)
         print(f"{name}\tcold={cold:.3f}\twarm2nd={warm:.3f}")
         spark.stop()
 

@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Empirical scaling probe: time each headline/TPC-H/LLM query at
-sf0.01 and sf0.1 (10× the rows) and report the wall-time ratio.
+sf0.01 and sf0.1 (10× the rows) and report the wall-time ratio. Each
+timing is bench.time_key's min-of-N noop write, which computes every
+output column.
 
 Reading the ratio at fixture scale:
 - ratio ≪ 10: fixed job overhead dominates — the query's data-dependent
@@ -24,14 +26,13 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from oke_cassandra_spark_locality_demo_spark import registry
 from oke_cassandra_spark_locality_demo_spark.session import build_session
 
-from bench import HEADLINE, LLM_SECONDARY
+from bench import HEADLINE, LLM_SECONDARY, time_key
 
 SF_SMALL = "/root/testdata/sf0.01"
 SF_BIG = "/root/testdata/sf0.1"
@@ -40,15 +41,6 @@ SF_BIG = "/root/testdata/sf0.1"
 #: real pathologies this catches (quadratic pair joins, cross products)
 #: land at 30-100×.
 SUPERLINEAR_RATIO = 14.0
-
-
-def time_query(fn, spark, sf_dir: str, repeats: int = 3) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        best = min(best, time.time() - t0)
-    return best
 
 
 def main() -> None:
@@ -86,13 +78,13 @@ def main() -> None:
         fn = qs[name]
         # warm both paths once so codegen/IO caches and any trained-state
         # memos (BPE/IVF) are charged to neither measurement
-        fn(spark, SF_SMALL).count()
-        fn(spark, SF_BIG).count()
-        t_small = time_query(fn, spark, SF_SMALL, repeats=args.repeats)
-        t_big = time_query(fn, spark, SF_BIG, repeats=args.repeats)
+        time_key(spark, fn, SF_SMALL, 1)
+        time_key(spark, fn, SF_BIG, 1)
+        t_small = time_key(spark, fn, SF_SMALL, args.repeats)
+        t_big = time_key(spark, fn, SF_BIG, args.repeats)
         ratio = t_big / t_small if t_small > 0 else float("inf")
-        rows.append({"query": name, "sf001_sec": round(t_small, 3),
-                     "sf01_sec": round(t_big, 3), "ratio": round(ratio, 2)})
+        rows.append({"query": name, "sf001_sec": t_small,
+                     "sf01_sec": t_big, "ratio": round(ratio, 2)})
         if ratio > SUPERLINEAR_RATIO:
             flagged.append((name, ratio))
     print(json.dumps({"probe": "scaling_10x", "queries": rows,

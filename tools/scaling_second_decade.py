@@ -47,7 +47,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from oke_cassandra_spark_locality_demo_spark import registry
 from oke_cassandra_spark_locality_demo_spark.session import build_session
 
-from tools.scaling_probe import SUPERLINEAR_RATIO, time_query
+from bench import HEADLINE, LLM_SECONDARY, time_key
+from tools.scaling_probe import SUPERLINEAR_RATIO
 
 WATCH_KEYS = ["q_udf_cogroup", "q_topk_per_group", "q_join_null_safe"]
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -93,8 +94,6 @@ def main() -> None:
     args = ap.parse_args()
     if args.keys is None:
         if args.suite == "bench":
-            from bench import HEADLINE, LLM_SECONDARY
-
             args.keys = list(
                 dict.fromkeys(
                     HEADLINE
@@ -139,7 +138,7 @@ def main() -> None:
     for key in args.keys:
         fn = qs[key]
         times = {
-            tag: time_query(fn, spark, d, args.repeats) for tag, d in dirs
+            tag: time_key(spark, fn, d, args.repeats) for tag, d in dirs
         }
         ratios = {}
         flagged = False
@@ -152,7 +151,7 @@ def main() -> None:
         if flagged:
             gate_hits.append(key)
         results[key] = {
-            "sec": {t: round(v, 3) for t, v in times.items()},
+            "sec": times,
             "ratios": ratios,
         }
         chain = " -> ".join(f"{times[t]:.2f}s" for t, _ in dirs)
